@@ -1,29 +1,37 @@
-"""Clustering stage: distributed connected components on the edge list.
+"""Clustering stage: labeled edge list → ``DataFrame[ID, component]``.
 
 Behavioral spec: /root/reference/bib_dedupe/cluster.py:78-120 (recursive
 DFS over a driver-local adjacency dict, with a same-search_set expansion
-constraint at :56-64). The DFS neither distributes nor survives deep
-chains; here we run the large-star/small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond") as an iterative DataFrame
-job: O(log² n) rounds, each a pair of groupBy shuffles, with per-round
-``localCheckpoint`` (or persisted parquet checkpoints for resumability)
-to truncate lineage.
+constraint at :56-64): a node whose non-empty search_set is already in
+the component being built is rejected — left unvisited — and later
+anchors a new component that absorbs its not-yet-visited neighbors.
+Components are identified by their minimum member ID.
 
-Output: ``DataFrame[ID, component]`` where component = min node id of the
-component — matching the reference's sorted-first-ID cluster identity.
+``cluster()`` takes one of two exact paths, chosen by ONE aggregate job
+over the labeled edges that returns both the edge count and whether any
+edge carries a non-empty search_set:
 
-Same-search_set constraint: the reference excludes a node from a component
-when its non-empty search_set is already present, in DFS visit order
-(cluster.py:56-64) — an evicted node stays unvisited and later anchors a
-new component that absorbs its not-yet-visited neighbors. We run
-unconstrained CC first (fast path: the constraint binds only on rare
-transitive same-set chains, since direct same-set pairs were already
-pruned at blocking, block.py:127-149), then re-run the reference's exact
-DFS — over edges in canonical ``(src, dst)``-sorted order — on ONLY the
-conflicted components, each as one ``applyInPandas`` group. Parity claim:
-output is identical to the reference when the reference receives its
-matched pairs sorted by (ID_1, ID_2); for other row orders the reference
-itself is input-order-dependent (dict/DFS insertion order).
+- **single task** (edge count ≤ ``SINGLE_TASK_MAX_EDGES`` and ≤
+  ``max_conflicted_edges``): every edge goes to one ``applyInPandas``
+  group running ``_constrained_split_pdf``, the reference DFS over edges
+  in canonical ``(src, dst)``-sorted order. Filtering that sorted list
+  to one component keeps the relative order of its nodes' first
+  appearances and components never touch, so one DFS over the whole
+  graph equals CC followed by per-component DFS — with no CC rounds, no
+  conflict detection and no checkpoint files.
+- **distributed** (larger graphs): the large-star/small-star algorithm
+  (Kiveris et al., "Connected Components in MapReduce and Beyond") as an
+  iterative DataFrame job, O(log² n) rounds, each a pair of groupBy
+  shuffles with per-round ``localCheckpoint`` (or persisted parquet
+  checkpoints for resumability) to truncate lineage. When the gate saw a
+  search_set, the components holding two members of one set (rare:
+  direct same-set pairs were pruned at blocking, block.py:127-149) are
+  re-split by the same DFS, each as one ``applyInPandas`` group.
+
+Parity claim: output is identical to the reference when the reference
+receives its matched pairs sorted by (ID_1, ID_2); for other row orders
+the reference itself is input-order-dependent (dict/DFS insertion
+order). Self-loop rows (ID_1 == ID_2) are dropped on both paths.
 """
 from __future__ import annotations
 
@@ -144,11 +152,29 @@ def connected_components(
 # failure) — fail loudly instead of grinding one executor for hours
 MAX_CONFLICTED_COMPONENT_EDGES = 5_000_000
 
+# graphs with at most this many edges skip distributed CC and run the DFS
+# over ALL edges in one task (see module docstring). Measured with
+# scripts/cluster_crossover.py (local[2], 2 GB driver heap, duplicate-
+# cluster graphs without search sets, 3 interleaved repeats in fresh
+# JVMs, load 2.2-2.7, kernel gauge 33-52 ms), median cluster() wall:
+#
+#     edges       single task    distributed CC (jobs)
+#     10,000        1.2 s          6.0 s (33)
+#     100,000       2.6 s         12.5 s (36)
+#     300,000       6.0 s         21.4 s (35)
+#     1,000,000    15.1 s         40.4 s (31)
+#
+# The single task won every pair; the crossover lies above 1M edges. The
+# bound stays at the largest size measured, so one task never holds a
+# graph larger than one shown to win.
+SINGLE_TASK_MAX_EDGES = 1_000_000
+
 
 def _constrained_split_pdf(
     pdf: pd.DataFrame, max_edges: int = MAX_CONFLICTED_COMPONENT_EDGES
 ) -> pd.DataFrame:
-    """Reference-faithful constrained DFS over one conflicted component.
+    """Reference-faithful constrained DFS over one edge set: a whole small
+    graph, or one conflicted component of a large one.
 
     Re-implements /root/reference/bib_dedupe/cluster.py:13-64 semantics
     (recursive pre-order DFS; a node whose non-empty search_set is already
@@ -215,38 +241,55 @@ def cluster(
     enforce_search_sets: bool = True,
     checkpoint_dir: str | None = None,
     max_conflicted_edges: int = MAX_CONFLICTED_COMPONENT_EDGES,
+    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
 ) -> DataFrame:
     """Labeled edge list → DataFrame[ID, component].
 
     Only edges carrying ``label`` participate (cluster.py:98). Components
     are identified by their minimum member ID. The same-search_set
-    constraint follows the reference DFS exactly (see module docstring):
-    distributed CC first, then per-component DFS resolution restricted to
-    the (rare) components that actually contain a same-set conflict.
+    constraint follows the reference DFS exactly (see module docstring).
+    Graphs of at most ``min(single_task_max_edges, max_conflicted_edges)``
+    edges run the DFS in one task; larger ones run distributed CC plus
+    DFS resolution of the (rare) conflicted components only.
+    ``single_task_max_edges=0`` forces the distributed path.
     """
-    edges_full = matched_df.filter(F.col(C.DUPLICATE_LABEL) == label).select(
-        F.col("ID_1").alias("src"),
-        F.col("ID_2").alias("dst"),
-        F.coalesce(F.col("search_set_1"), F.lit("")).alias("sset_src"),
-        F.coalesce(F.col("search_set_2"), F.lit("")).alias("sset_dst"),
-    )
-    edges = edges_full.select("src", "dst")
-
-    components = connected_components(edges, checkpoint_dir=checkpoint_dir)
-
-    if not enforce_search_sets:
-        return components
-
-    # cheapest gate first: with no non-empty search_set anywhere on the
-    # edges, the constraint cannot bind — skip the whole resolution plan
-    if (
-        edges_full.filter(
-            (F.col("sset_src") != "") | (F.col("sset_dst") != "")
+    if enforce_search_sets:
+        sset_1 = F.coalesce(F.col("search_set_1"), F.lit(""))
+        sset_2 = F.coalesce(F.col("search_set_2"), F.lit(""))
+    else:  # no set on any node: the constraint cannot bind
+        sset_1 = sset_2 = F.lit("")
+    edges_full = (
+        matched_df.filter(F.col(C.DUPLICATE_LABEL) == label)
+        .filter(F.col("ID_1") != F.col("ID_2"))
+        .select(
+            F.col("ID_1").alias("src"),
+            F.col("ID_2").alias("dst"),
+            sset_1.alias("sset_src"),
+            sset_2.alias("sset_dst"),
         )
-        .limit(1)
-        .count()
-        == 0
-    ):
+    )
+
+    # the one path-choosing action: graph size, and whether any search_set
+    # is present for the constraint to bind on
+    gate = edges_full.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max((F.col("sset_src") != "") | (F.col("sset_dst") != "")).alias(
+            "any_set"
+        ),
+    ).first()
+
+    if gate["n"] <= min(single_task_max_edges, max_conflicted_edges):
+        # one group holding every edge; the key is a string because an
+        # integer literal in groupBy is read as a column ordinal
+        return edges_full.groupBy(F.lit("all")).applyInPandas(
+            lambda pdf: _constrained_split_pdf(pdf, max_conflicted_edges),
+            schema=f"{C.ID} string, {C.COMPONENT} string",
+        )
+
+    components = connected_components(
+        edges_full.select("src", "dst"), checkpoint_dir=checkpoint_dir
+    )
+    if not gate["any_set"]:
         return components
 
     # per-node search_set from the edge endpoints (cluster.py:102-106)

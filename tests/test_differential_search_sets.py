@@ -3,8 +3,11 @@
 Same-set pair pruning (block F3) is order-independent and must match the
 reference exactly; the clustering search-set constraint is order-
 dependent in the reference (DFS visit order), so cluster parity is
-asserted only when no constraint binds — matched-edge parity is asserted
-unconditionally.
+asserted on canonically sorted edge lists. Each cluster case pins its
+expected components, checks the reference against them when the
+reference checkout is present, and checks both ``cluster()`` paths (one
+DFS task, forced distributed CC) against them — and against each other
+row for row — either way.
 """
 import sys
 from pathlib import Path
@@ -15,14 +18,16 @@ import pytest
 from bib_dedupe_spark import block, match, prep
 from bib_dedupe_spark.sources.synthetic import generate
 from tests.reference_cases import REFERENCE_ROOT, reference_available
+from tests.test_cluster_paths import cluster_both_paths
 
-pytestmark = pytest.mark.skipif(
+requires_reference = pytest.mark.skipif(
     not reference_available(), reason="reference checkout not available"
 )
 
 _SHIMS = str(Path(__file__).parent / "_shims")
 
 
+@requires_reference
 def test_search_set_pipeline_parity(spark):
     for p in (_SHIMS, str(REFERENCE_ROOT)):
         if p not in sys.path:
@@ -77,13 +82,16 @@ def _ref_components(matched_pd):
 
 
 def _our_components(spark, matched_pd):
-    from bib_dedupe_spark import cluster
-
-    got = cluster(spark.createDataFrame(matched_pd)).collect()
     comps = {}
-    for r in got:
-        comps.setdefault(r["component"], set()).add(r["ID"])
+    for node, comp in cluster_both_paths(spark.createDataFrame(matched_pd)):
+        comps.setdefault(comp, set()).add(node)
     return {frozenset(v) for v in comps.values()}
+
+
+def _check(spark, matched_pd, want):
+    if reference_available():
+        assert _ref_components(matched_pd) == want
+    assert _our_components(spark, matched_pd) == want
 
 
 def _matched(rows):
@@ -100,9 +108,7 @@ def test_transitive_same_set_chain_parity(spark):
     m = _matched(
         [("a", "b", "S", ""), ("b", "c", "", "S")]
     )
-    want = _ref_components(m)
-    assert want == {frozenset({"a", "b"}), frozenset({"c"})}
-    assert _our_components(spark, m) == want
+    _check(spark, m, {frozenset({"a", "b"}), frozenset({"c"})})
 
 
 def test_evicted_node_keeps_downstream_subtree(spark):
@@ -110,9 +116,7 @@ def test_evicted_node_keeps_downstream_subtree(spark):
     m = _matched(
         [("a", "b", "S", ""), ("b", "c", "", "S"), ("c", "d", "S", "")]
     )
-    want = _ref_components(m)
-    assert want == {frozenset({"a", "b"}), frozenset({"c", "d"})}
-    assert _our_components(spark, m) == want
+    _check(spark, m, {frozenset({"a", "b"}), frozenset({"c", "d"})})
 
 
 def test_first_visited_beats_min_id(spark):
@@ -124,9 +128,7 @@ def test_first_visited_beats_min_id(spark):
     m = _matched(
         [("a", "c", "", "S"), ("c", "d", "S", ""), ("b", "d", "S", "")]
     )
-    want = _ref_components(m)
-    assert want == {frozenset({"a", "c", "d"}), frozenset({"b"})}
-    assert _our_components(spark, m) == want
+    _check(spark, m, {frozenset({"a", "c", "d"}), frozenset({"b"})})
 
 
 def test_multi_conflict_and_clean_components_mixed(spark):
@@ -139,14 +141,22 @@ def test_multi_conflict_and_clean_components_mixed(spark):
             ("p", "q", "", ""),
         ]
     )
-    want = _ref_components(m)
-    assert _our_components(spark, m) == want
-    assert frozenset({"x", "y"}) in want and frozenset({"p", "q"}) in want
+    _check(
+        spark,
+        m,
+        {
+            frozenset({"a", "b"}),
+            frozenset({"c"}),
+            frozenset({"x", "y"}),
+            frozenset({"p", "q"}),
+        },
+    )
 
 
 def test_giant_conflicted_component_fails_loudly(spark):
     """A pathological conflicted component must error with guidance, not
-    grind one task forever."""
+    grind one task forever. The limit also caps the single-task path, so
+    this 3-edge graph runs distributed CC and trips it there."""
     from bib_dedupe_spark.operators import cluster as cl
 
     m = _matched(

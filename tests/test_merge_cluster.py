@@ -1,13 +1,14 @@
 """Tests for the cluster and merge stages.
 
 Merge expectations mirror /root/reference/tests/merge_test.py:13-41;
-cluster tests pin the distributed connected-components semantics
-(min-ID labeling, chains, search-set splitting).
+cluster tests pin the connected-components semantics (min-ID labeling,
+chains, search-set splitting) on both cluster() paths.
 """
 from pyspark.sql import functions as F
 
-from bib_dedupe_spark.operators.cluster import cluster, connected_components
+from bib_dedupe_spark.operators.cluster import connected_components
 from bib_dedupe_spark.operators.merge import merge
+from tests.test_cluster_paths import cluster_both_paths
 
 
 def test_merge_survivorship(spark):
@@ -74,7 +75,7 @@ def test_cluster_search_set_split(spark):
         ],
         ["ID_1", "search_set_1", "search_set_2", "ID_2", "duplicate_label"],
     )
-    got = {r["ID"]: r["component"] for r in cluster(matched).collect()}
+    got = dict(cluster_both_paths(matched))
     # a and c share search_set s1 → c (larger ID) is split out
     assert got["a"] == "a"
     assert got["b"] == "a"
@@ -89,7 +90,7 @@ def test_cluster_ignores_maybe_edges(spark):
         ],
         ["ID_1", "search_set_1", "search_set_2", "ID_2", "duplicate_label"],
     )
-    got = {r["ID"]: r["component"] for r in cluster(matched).collect()}
+    got = dict(cluster_both_paths(matched))
     assert got == {"c": "c", "d": "c"}
 
 
