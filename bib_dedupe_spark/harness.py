@@ -164,7 +164,6 @@ def q_block_refined_pairs(spark, sf_dir):
     pairs = candidate_pairs(
         rec,
         max_block_size=32,
-        prune=True,
         hot_key_strategy="salt",
         refine_hot_keys=True,
         refine_min_quad=0,  # force routing despite the tiny fixture

@@ -8,9 +8,9 @@ Spark-first design (replaces the reference's 16-process pool + pandas
 groupby/combinations):
 
   prepared records
-    → per-record ARRAY of (rule_idx, composite key) entries, one per
-      blocking rule whose fields are all non-empty        (explode, no UDF)
-      + (title, tokens, search_set) pruning payload per key row
+    → key rows [ID, rule_idx, rto, key, *_CARRY]: one per blocking rule
+      whose fields are all non-empty (explode, no UDF), each carrying
+      the record's hashed pruning payload (:func:`_key_rows`)
     → hash-partitioned self-equi-join on (rule_idx, key) with ID_1 < ID_2
     → INLINE pruning on the join output (same stage, no extra joins):
       same-search-set rows dropped; title-overlap verdict computed as a
@@ -19,6 +19,11 @@ groupby/combinations):
       require-title-overlap flags, overlap verdict        (single shuffle)
     → filter(title_ok | !require)  — raw pairs never reach a record join
     → two enrichment joins against the records (survivors only)
+
+Incremental blocking (:func:`block_delta`) uses the same key rows as its
+persisted corpus index, the same prune + aggregate step and, for hot
+keys, the same AllPairs generator (:func:`_refined_hot_pairs`) probed
+batch→corpus and corpus→batch.
 
 Skew handling: composite keys are explicit columns, so hot keys are
 observable; keys whose group exceeds ``max_block_size`` are dropped from
@@ -152,6 +157,71 @@ def _carry_columns():
     return cached_fragment("block._carry_columns_hashed", _build)
 
 
+def _key_rows(records_df: DataFrame, id_col) -> DataFrame:
+    """Key rows [ID, rule_idx, rto, key, *_CARRY], one per passing rule.
+
+    The one key-row builder of both blocking paths: the in-corpus self
+    join (with ``id_col`` an xxhash64 surrogate when enabled) and the
+    persisted streaming index (:func:`corpus_key_table`, string IDs).
+    """
+    return (
+        records_df.filter(F.col(C.TITLE).isNotNull())
+        .select(
+            id_col.alias(C.ID),
+            *_carry_columns(),
+            F.explode(_key_entries_column()).alias("entry"),
+        )
+        .select(
+            C.ID,
+            F.col("entry.rule_idx").alias("rule_idx"),
+            F.col("entry.rto").alias("rto"),
+            F.col("entry.key").alias("key"),
+            *_CARRY,
+        )
+    )
+
+
+def _sided(df: DataFrame, side: str, cols: tuple) -> DataFrame:
+    """Key rows as one side of a pair join: ID and payload suffixed."""
+    return df.select(
+        F.col(C.ID).alias(f"ID_{side}"),
+        *cols,
+        *(F.col(c).alias(f"{c}_{side}") for c in _CARRY),
+    )
+
+
+def _oriented_cols() -> list:
+    """Raw-pair columns of an (l, r) join, oriented so ID_1 < ID_2."""
+    swap = F.col("ID_l") > F.col("ID_r")
+    cols = [
+        F.least("ID_l", "ID_r").alias("ID_1"),
+        F.greatest("ID_l", "ID_r").alias("ID_2"),
+        F.col("rule_idx"),
+        F.col("rto"),
+    ]
+    for c in _CARRY:
+        for out, keep, swapped in (("1", "l", "r"), ("2", "r", "l")):
+            cols.append(
+                F.when(swap, F.col(f"{c}_{swapped}"))
+                .otherwise(F.col(f"{c}_{keep}"))
+                .alias(f"{c}_{out}")
+            )
+    return cols
+
+
+def _self_join(keys: DataFrame) -> DataFrame:
+    """Raw pairs (ID_1 < ID_2) of the plain (rule_idx, key) self-join."""
+    return (
+        _sided(keys, "1", ("rule_idx", "rto", "key"))
+        .join(_sided(keys, "2", ("rule_idx", "key")), ["rule_idx", "key"])
+        .filter(F.col("ID_1") < F.col("ID_2"))
+        .select(
+            "ID_1", "ID_2", "rule_idx", "rto",
+            *(f"{c}_{s}" for c in _CARRY for s in ("1", "2")),
+        )
+    )
+
+
 def _inline_prune_flags(df: DataFrame) -> DataFrame:
     """ss-prune rows out; compute the pair-level title-overlap verdict.
 
@@ -165,26 +235,13 @@ def _inline_prune_flags(df: DataFrame) -> DataFrame:
     aggregated require-title-overlap flag (AND over producing rules) —
     attribution still sees every producing rule, exactly like the
     reference's prune-after-dedupe order (block.py:152-198,272-276).
+
+    The title-equality exemption compares xxhash64(title) without a
+    collision check. Unlike a surrogate-id collision (checked, because
+    it would fuse two records), a title-hash collision can only exempt
+    one pair from the overlap prune: one extra candidate pair, which the
+    matcher still decides (~2^-64 per pair).
     """
-    for side in ("1", "2"):
-        if f"_tokh_{side}" not in df.columns:
-            # delta path ships (title, search_set) strings through its
-            # broadcast join; derive the hashed prune payload here, on
-            # the join output (survivors only)
-            t = F.col(f"_title_{side}")
-            toks = F.filter(F.split(t, " "), lambda x: x != "")
-            df = (
-                df.withColumn(f"_th_{side}", F.xxhash64(t))
-                .withColumn(f"_sp_{side}", t.contains(" "))
-                .withColumn(f"_tl_{side}", F.length(t))
-                .withColumn(f"_nt_{side}", F.size(toks))
-                .withColumn(
-                    f"_tokh_{side}",
-                    F.array_distinct(
-                        F.transform(toks, lambda x: F.xxhash64(x))
-                    ),
-                )
-            )
     exempt = (
         (F.col("_th_1") == F.col("_th_2"))
         | (~F.col("_sp_1"))
@@ -208,6 +265,34 @@ def _inline_prune_flags(df: DataFrame) -> DataFrame:
     )
 
 
+def _prune_aggregate(
+    raw_pairs: DataFrame, membership: DataFrame | None = None
+) -> DataFrame:
+    """Raw pairs → pruned (ID_1, ID_2, rule_idx), one row per pair.
+
+    Earliest rule wins the attribution; overlap is required only if
+    EVERY producing rule required it (block.py:272-276). ``membership``
+    (refined hot groups) restores attribution for pairs the word join
+    legitimately skipped (:func:`_recover_attribution`).
+    """
+    grouped = (
+        _inline_prune_flags(raw_pairs)
+        .groupBy("ID_1", "ID_2")
+        .agg(
+            F.min("rule_idx").alias("rule_idx"),
+            F.min(F.col("rto").cast("int")).cast("boolean").alias(
+                "require_title_overlap"
+            ),
+            F.first("_title_ok").alias("_title_ok"),
+        )
+        .filter(F.col("_title_ok") | ~F.col("require_title_overlap"))
+        .select("ID_1", "ID_2", "rule_idx")
+    )
+    if membership is not None:
+        grouped = _recover_attribution(grouped, membership)
+    return grouped
+
+
 def _refine_base(keys: DataFrame, hot_ref: DataFrame) -> DataFrame:
     """Hot-group key rows with distinct-token count and wildcard flag."""
     base = keys.join(F.broadcast(hot_ref), ["rule_idx", "key"])
@@ -220,21 +305,16 @@ def _word_prefix_tables(base: DataFrame):
     """(all-words, prefix-words) tables for the refined word join.
 
     ``prefix`` keeps each non-wildcard record's ⌊(d−1)/2⌋+1 rarest
-    distinct token hashes (group-local document frequency ``_wdf``, ties
-    by hash — the pigeonhole superset guarantee holds for ANY fixed-size
-    choice among equally-rare tokens) — the probe side of the AllPairs
-    join; ``words`` is the full index side. Tokens travel as xxhash64
-    longs (see :func:`_carry_columns`), so the wdf shuffle and the join
-    keys are fixed 8-byte values.
+    distinct token hashes (group-local document frequency ``_wdf`` over
+    every row of ``base``, ties by hash — the pigeonhole superset
+    guarantee holds for ANY fixed-size choice among equally-rare
+    tokens) — the probe side of the AllPairs join; ``words`` is the full
+    index side. Both keep every ``base`` column. Tokens travel as
+    xxhash64 longs (see :func:`_carry_columns`), so the wdf shuffle and
+    the join keys are fixed 8-byte values.
     """
     words = base.filter(~F.col("_wc")).select(
-        "rule_idx",
-        "rto",
-        "key",
-        C.ID,
-        *_CARRY,
-        F.col("_d"),
-        F.explode("_tokh").alias("_w"),
+        "*", F.explode("_tokh").alias("_w")
     )
     wdf = words.groupBy("rule_idx", "key", "_w").agg(
         F.count("*").alias("_wdf")
@@ -271,110 +351,89 @@ REFINE_COST_RATIO = 0.5
 REFINE_MIN_QUAD_PAIRS = 128_000_000
 
 
-def word_join_cost(keys: DataFrame, hot_ref: DataFrame) -> DataFrame:
-    """Exact per-key emission estimate of the refined word join.
-
-    Each prefix row (record, word) matches ``_wdf`` index rows, so the
-    join's output volume per (rule, key) is Σ_prefix _wdf — computed
-    from the same word/prefix tables the join itself would use. Routing
-    on it is semantics-free: both branches produce the identical final
-    pair set; this only picks the cheaper physical plan per group.
-
-    Diagnostic/standalone form — :func:`candidate_pairs` inlines the
-    same aggregation over its shared prefix table so the routing
-    estimate and the pair join reuse one plan (and one persist, with
-    ``cache_out``).
-    """
-    _words, prefix = _word_prefix_tables(_refine_base(keys, hot_ref))
-    return prefix.groupBy("rule_idx", "key").agg(
-        F.sum("_wdf").alias("_est")
-    )
-
-
 def _refined_hot_pairs(
-    base: DataFrame,
-    words: DataFrame,
-    prefix: DataFrame,
+    probe: DataFrame,
+    index: DataFrame,
+    probe_prefix: DataFrame,
+    index_words: DataFrame,
     salt_bucket_size: int,
-    sided,
-    out_cols: list,
 ) -> DataFrame:
-    """Candidate pairs for hot require-title-overlap groups WITHOUT the
+    """Raw pairs of hot require-title-overlap groups WITHOUT the
     quadratic all-pairs join — provably output-preserving.
 
     Inside a group, the downstream title-overlap prune
     (:func:`_inline_prune_flags`, mirroring reference block.py:152-198)
     keeps a pair only if (a) either title has no space, (b) titles are
     identical, or (c) DISTINCT shared words ≥ 0.5·(min(multiset len)+1).
-    So instead of generating all k²/2 pairs and pruning, generate only a
-    superset of the survivors:
+    So instead of generating all pairs and pruning, generate only a
+    superset of the survivors between the ``probe`` and ``index`` rows
+    of each group:
 
     * **wildcards** (no-space titles, plus zero-token degenerates that
       can only pass via identical titles) × everyone — these pairs are
       prune-exempt, i.e. necessary output; bucketed like the salted join
       so no task sees more than ``salt_bucket_size`` targets per probe.
+      A wildcard × wildcard pair is emitted only from its smaller ID, so
+      probing in both directions emits it once.
     * **prefix-filtered word join** (AllPairs-style) for the rest: each
-      record indexes ALL its distinct title words, but probes with only
-      its ⌊(d−1)/2⌋+1 rarest (group-local document frequency, ties by
-      token hash) — any pair passing (b) or (c) shares > half the smaller
-      distinct set, so the smaller record's rarest-half prefix must
-      contain a shared word. Common words (stopwords) almost never land
-      in prefixes, which is exactly what kills the quadratic term at
-      low-entropy keys.
+      index record lists ALL its distinct title words, each probe record
+      only its ⌊(d−1)/2⌋+1 rarest (group-local document frequency, ties
+      by token hash) — any pair passing (b) or (c) shares > half the
+      smaller distinct set, so the smaller record's rarest-half prefix
+      must contain a shared word. Common words (stopwords) almost never
+      land in prefixes, which is exactly what kills the quadratic term
+      at low-entropy keys.
 
-    Generated ⊆ all-pairs and ⊇ prune survivors, and the exact prune
-    still runs downstream, so the final pair set is bit-identical to the
-    salted path (pinned by tests/test_block_refine.py differential).
-    First-rule attribution for pairs this generator legitimately skips is
-    restored exactly by the post-prune recovery join in
-    :func:`candidate_pairs`.
+    In-corpus blocking calls this once with probe = index = the hot
+    group (either side of a pair probes). Incremental blocking calls it
+    twice, batch→corpus and corpus→batch, because the smaller side of a
+    crossing pair may sit on either. Generated ⊆ all-pairs and ⊇ prune
+    survivors, and the exact prune still runs downstream, so the final
+    pair set is bit-identical to the salted path (pinned by the refine,
+    fuzz and block_delta differentials). First-rule attribution for
+    pairs this generator legitimately skips is restored exactly by the
+    post-prune recovery join (:func:`_recover_attribution`).
 
-    ``base`` / ``words`` / ``prefix`` are the :func:`_refine_base` /
-    :func:`_word_prefix_tables` outputs already restricted to the ROUTED
-    hot keys. The caller builds them ONCE over every refine-candidate
-    key (the cost estimate reads the same ``prefix``), so the
-    wdf-shuffle + window chain is not recomputed per consumer; because
-    ``_wdf`` and the prefix rank are group-local to (rule_idx, key),
-    filtering the prebuilt tables by routed key is bit-identical to
-    rebuilding them from the routed subset.
+    ``probe``/``index`` are :func:`_refine_base` rows and
+    ``probe_prefix``/``index_words`` :func:`_word_prefix_tables` rows,
+    all restricted to the ROUTED hot keys. Because ``_wdf`` and the
+    prefix rank are group-local to (rule_idx, key), filtering tables
+    prebuilt over every candidate key is bit-identical to rebuilding
+    them from the routed subset.
     """
-
-    # --- wildcard × all (bucketed; each unordered pair emitted once) ---
     n_buckets = F.ceil(F.col("_block_n") / F.lit(salt_bucket_size)).cast(
         "int"
     )
-    probe = sided(
-        base.filter("_wc").withColumn(
+    wc_probe = _sided(
+        probe.filter("_wc").withColumn(
             "_to", F.explode(F.sequence(F.lit(0), n_buckets - 1))
         ),
         "l",
         ("rule_idx", "rto", "key", "_to"),
     )
-    target = sided(
-        base.withColumn(
+    wc_target = _sided(
+        index.withColumn(
             "_to", F.pmod(F.xxhash64(C.ID), n_buckets).cast("int")
         ).withColumn("_wc_r", F.col("_wc")),
         "r",
         ("rule_idx", "key", "_to", "_wc_r"),
     )
     wc_pairs = (
-        probe.join(target, ["rule_idx", "key", "_to"])
+        wc_probe.join(wc_target, ["rule_idx", "key", "_to"])
         .filter(
             (~F.col("_wc_r") & (F.col("ID_l") != F.col("ID_r")))
             | (F.col("ID_l") < F.col("ID_r"))
         )
-        .select(*out_cols)
+        .select(*_oriented_cols())
     )
-
-    # --- prefix-filtered word join over non-wildcards ---
     word_pairs = (
-        sided(prefix, "l", ("rule_idx", "rto", "key", "_w"))
+        _sided(probe_prefix, "l", ("rule_idx", "rto", "key", "_w"))
         .join(
-            sided(words, "r", ("rule_idx", "key", "_w")),
+            _sided(index_words, "r", ("rule_idx", "key", "_w")),
             ["rule_idx", "key", "_w"],
         )
         .filter(F.col("ID_l") != F.col("ID_r"))
-        .select(*out_cols)
+        .select(*_oriented_cols())
     )
     return wc_pairs.unionByName(word_pairs)
 
@@ -395,24 +454,21 @@ def candidate_pairs(
     max_block_size: int | None = 1000,
     cache: bool = True,
     hot_key_strategy: str = "salt",
-    prune: bool = False,
     surrogate_ids: bool = False,
     salt_bucket_size: int | None = None,
     refine_hot_keys: bool = True,
     cache_out: list | None = None,
     refine_min_quad: int | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (ID_1 < ID_2) with first-rule attribution.
+    """Pruned candidate pairs (ID_1 < ID_2, rule_idx), first-rule
+    attribution.
 
-    ``prune=False`` returns (ID_1, ID_2, rule_idx, require_title_overlap)
-    — the raw aggregated pair table. ``prune=True`` (the block()/
-    block_delta() path) additionally applies the search-set and
-    title-overlap prunes INLINE: the key table carries each record's
-    (title, tokens, search_set), the flags evaluate on the self-join
-    output map-side, and the returned (ID_1, ID_2, rule_idx) table is
-    already pruned — candidates never pay post-aggregation record joins
-    just to be discarded (at 155k records that is 71M raw pairs pruned
-    to ~1.5M).
+    The key rows (:func:`_key_rows`) carry each record's hashed
+    (title, tokens, search_set) payload, the search-set and
+    title-overlap prunes evaluate on the self-join output map-side, and
+    the returned table is already pruned — candidates never pay
+    post-aggregation record joins just to be discarded (at 155k records
+    that is 71M raw pairs pruned to ~1.5M).
 
     Hot-key skew: a blocking key shared by k records implies O(k²) pairs.
     With ``hot_key_strategy="salt"`` (default), keys whose group exceeds
@@ -433,22 +489,21 @@ def candidate_pairs(
     ``max_block_size`` route through the salted join too (in "drop" mode
     only keys above ``max_block_size`` are dropped, exactly as before).
 
-    ``refine_hot_keys`` (default on; applies only with ``prune=True`` in
-    salt mode): hot groups of require-title-overlap rules skip the
-    quadratic salted self-join entirely and generate pairs through
-    :func:`_refined_hot_pairs` — wildcard×all plus a prefix-filtered
-    word join whose output is a superset of the downstream prune's
-    survivors, so the FINAL pair set (and, via the post-prune recovery
-    join, first-rule attribution) is bit-identical while the raw pair
-    volume stops growing quadratically at low-entropy keys. Non-overlap
-    rules' hot groups still use the salted join (their pairs are all
-    legitimate output). ``refine_min_quad`` overrides
-    ``REFINE_MIN_QUAD_PAIRS``, the AGGREGATE all-pairs-volume floor
-    below which the whole hot rto set is routed to the salted join
-    without building the refinement subplan at all (0 = always consider
-    refinement — used by the refinement differential tests and the
-    block_refined_pairs oracle, which pin the word-join generator on
-    small fixtures).
+    ``refine_hot_keys`` (default on; salt mode only): hot groups of
+    require-title-overlap rules skip the quadratic salted self-join
+    entirely and generate pairs through :func:`_refined_hot_pairs` —
+    wildcard×all plus a prefix-filtered word join whose output is a
+    superset of the downstream prune's survivors, so the FINAL pair set
+    (and, via the post-prune recovery join, first-rule attribution) is
+    bit-identical while the raw pair volume stops growing quadratically
+    at low-entropy keys. Non-overlap rules' hot groups still use the
+    salted join (their pairs are all legitimate output).
+    ``refine_min_quad`` overrides ``REFINE_MIN_QUAD_PAIRS``, the
+    AGGREGATE all-pairs-volume floor below which the whole hot rto set
+    is routed to the salted join without building the refinement subplan
+    at all (0 = always consider refinement — used by the refinement
+    differential tests and the block_refined_pairs oracle, which pin the
+    word-join generator on small fixtures).
 
     The exploded key table feeds several consumers; ``cache`` persists it
     so the upstream prep UDF pass runs once.
@@ -495,36 +550,16 @@ def candidate_pairs(
             )
             id_map = None
 
-    carry = _carry_columns() if prune else []
-    id_col = (
-        F.xxhash64(C.ID).alias(C.ID) if id_map is not None else F.col(C.ID)
-    )
-    keys = (
-        base.select(id_col, *carry, F.explode(_key_entries_column()).alias("entry"))
-        .select(
-            C.ID,
-            *(_CARRY if prune else ()),
-            F.col("entry.rule_idx").alias("rule_idx"),
-            F.col("entry.rto").alias("rto"),
-            F.col("entry.key").alias("key"),
-        )
+    keys = _key_rows(
+        base, F.xxhash64(C.ID) if id_map is not None else F.col(C.ID)
     )
     if cache:
         from pyspark.storagelevel import StorageLevel
 
         keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _sided(df: DataFrame, side: str, cols: tuple) -> DataFrame:
-        renames = {C.ID: f"ID_{side}"}
-        if prune:
-            renames.update({c: f"{c}_{side}" for c in _CARRY})
-        out = df
-        for old, new in renames.items():
-            out = out.withColumnRenamed(old, new)
-        return out.select(f"ID_{side}", *cols,
-                          *(f"{c}_{side}" for c in (_CARRY if prune else ())))
-
     hot_pairs = None
+    hot_rows = []
     if max_block_size is not None:
         if salt_bucket_size is None:
             salt_bucket_size = min(max_block_size, SALT_BUCKET_SIZE)
@@ -562,29 +597,26 @@ def candidate_pairs(
                 "requires. This corpus's key entropy is too low for salt "
                 "mode — raise salt_bucket_size/max_block_size, use "
                 "hot_key_strategy='drop', or leave refine_hot_keys on "
-                "(prune mode) so overlap-rule hot groups avoid the "
-                "salted join."
+                "so overlap-rule hot groups avoid the salted join."
             )
-        hot = (
-            records_df.sparkSession.createDataFrame(
-                hot_rows, schema=counts.schema
-            )
-            if hot_rows
-            else None
-        )
-    else:
-        hot = None
-        hot_rows = []
     refine_membership = None
-    if hot is not None:
+    if hot_rows:
+
+        def hot_keys(rows):
+            return F.broadcast(
+                records_df.sparkSession.createDataFrame(
+                    rows, schema=counts.schema
+                )
+            )
+
         keys_cold = keys.join(
-            F.broadcast(hot.select("rule_idx", "key")),
+            hot_keys(hot_rows).select("rule_idx", "key"),
             ["rule_idx", "key"],
             "left_anti",
         )
         if hot_key_strategy == "salt":
-            refine = refine_hot_keys and prune
-            if refine:
+            ref_rows, salt_rows = [], list(hot_rows)
+            if refine_hot_keys:
                 # aggregate quadratic floor (REFINE_MIN_QUAD_PAIRS): the
                 # word-join chain's fixed plan cost amortizes over ALL
                 # candidate keys, so the go/no-go is on the SUM of their
@@ -612,30 +644,20 @@ def candidate_pairs(
                         for r in hot_rows
                         if r["rule_idx"] not in _RTO_RULE_IDXS
                     ]
-                else:
-                    ref_rows, salt_rows = [], list(hot_rows)
-            else:
-                ref_rows, salt_rows = [], hot_rows
             if ref_rows:
                 # cost-based routing per hot key: word-join only where
-                # its measured emission beats the quadratic join (e.g. a
-                # tiny-vocabulary group shares words everywhere and is
-                # cheaper salted). Both branches are exact, so this is a
-                # physical-plan choice, not a semantic one.
+                # its measured emission (Σ _wdf over the prefix rows)
+                # beats the quadratic join (e.g. a tiny-vocabulary group
+                # shares words everywhere and is cheaper salted). Both
+                # branches are exact, so this is a physical-plan choice.
                 #
                 # The refine base + word/prefix tables are built ONCE
                 # over every refine-candidate key and shared with the
-                # generator below (filtered to the routed subset —
-                # bit-identical because _wdf and the prefix rank are
-                # group-local to (rule_idx, key)). With ``cache_out``
-                # the prefix table (the wdf-shuffle + window chain the
-                # cost collect forces anyway) is persisted so the
-                # downstream pair join re-reads it instead of
-                # recomputing both shuffles.
-                cand_ref = records_df.sparkSession.createDataFrame(
-                    ref_rows, schema=counts.schema
-                )
-                rbase = _refine_base(keys, cand_ref)
+                # generator below. With ``cache_out`` the prefix table
+                # (the wdf-shuffle + window chain the cost collect
+                # forces anyway) is persisted so the downstream pair join
+                # re-reads it instead of recomputing both shuffles.
+                rbase = _refine_base(keys, hot_keys(ref_rows))
                 rwords, rprefix = _word_prefix_tables(rbase)
                 if cache_out is not None:
                     from pyspark.storagelevel import StorageLevel
@@ -668,36 +690,12 @@ def candidate_pairs(
                         salt_rows.append(r)
                 ref_rows = routed
 
-            swap = F.col("ID_l") > F.col("ID_r")
-            hot_cols = [
-                F.least("ID_l", "ID_r").alias("ID_1"),
-                F.greatest("ID_l", "ID_r").alias("ID_2"),
-                F.col("rule_idx"),
-                F.col("rto"),
-            ]
-            if prune:
-                for c in _CARRY:
-                    hot_cols.append(
-                        F.when(swap, F.col(f"{c}_r")).otherwise(
-                            F.col(f"{c}_l")
-                        ).alias(f"{c}_1")
-                    )
-                    hot_cols.append(
-                        F.when(swap, F.col(f"{c}_l")).otherwise(
-                            F.col(f"{c}_r")
-                        ).alias(f"{c}_2")
-                    )
-
-            hot_pairs = None
             if salt_rows:
-                hot_salt = records_df.sparkSession.createDataFrame(
-                    salt_rows, schema=counts.schema
-                )
                 n_buckets = F.ceil(
                     F.col("_block_n") / F.lit(salt_bucket_size)
                 ).cast("int")
                 salted = keys.join(
-                    F.broadcast(hot_salt), ["rule_idx", "key"]
+                    hot_keys(salt_rows), ["rule_idx", "key"]
                 ).withColumn(
                     "_salt",
                     F.pmod(F.xxhash64(C.ID), n_buckets).cast("int"),
@@ -734,26 +732,22 @@ def candidate_pairs(
                     "r",
                     ("rule_idx", "key", "_i", "_j"),
                 )
-                hot_raw = (
+                hot_pairs = (
                     salted_left.join(
                         salted_right, ["rule_idx", "key", "_i", "_j"]
-                    ).filter(F.col("ID_l") != F.col("ID_r"))
+                    )
+                    .filter(F.col("ID_l") != F.col("ID_r"))
+                    .select(*_oriented_cols())
                 )
-                hot_pairs = hot_raw.select(*hot_cols)
             if ref_rows:
-                hot_ref = records_df.sparkSession.createDataFrame(
-                    ref_rows, schema=counts.schema
-                )
-                routed_keys = F.broadcast(
-                    hot_ref.select("rule_idx", "key")
-                )
+                routed_keys = hot_keys(ref_rows).select("rule_idx", "key")
+                group = rbase.join(routed_keys, ["rule_idx", "key"])
                 refined = _refined_hot_pairs(
-                    rbase.join(routed_keys, ["rule_idx", "key"]),
-                    rwords.join(routed_keys, ["rule_idx", "key"]),
+                    group,
+                    group,
                     rprefix.join(routed_keys, ["rule_idx", "key"]),
+                    rwords.join(routed_keys, ["rule_idx", "key"]),
                     salt_bucket_size,
-                    _sided,
-                    hot_cols,
                 )
                 hot_pairs = (
                     refined
@@ -763,10 +757,7 @@ def candidate_pairs(
                 # membership table for exact first-rule attribution of
                 # pairs the refined generator legitimately skips (no
                 # shared prefix word) that survive via ANOTHER rule
-                refine_membership = keys.join(
-                    F.broadcast(hot_ref.select("rule_idx", "key")),
-                    ["rule_idx", "key"],
-                ).select(C.ID, "rule_idx", "key")
+                refine_membership = group.select(C.ID, "rule_idx", "key")
         keys = keys_cold
 
     if max_block_size is not None:
@@ -786,52 +777,20 @@ def candidate_pairs(
         # the salting/refine differentials and the block oracles).
         keyed = keys.repartition("rule_idx", "key")
         nkey = Window.partitionBy("rule_idx", "key")
-        keys_join = (
+        keys = (
             keyed.withColumn("_n", F.count("*").over(nkey))
             .filter(F.col("_n") >= 2)
             .drop("_n")
         )
-    else:
-        keys_join = keys
-    left = _sided(keys_join, "1", ("rule_idx", "rto", "key"))
-    right = _sided(keys_join, "2", ("rule_idx", "key"))
-    raw_pairs = (
-        left.join(right, ["rule_idx", "key"])
-        .filter(F.col("ID_1") < F.col("ID_2"))
-        .select(
-            "ID_1", "ID_2", "rule_idx", "rto",
-            *(f"{c}_{s}" for c in (_CARRY if prune else ()) for s in ("1", "2")),
-        )
-    )
+    raw_pairs = _self_join(keys)
     if hot_pairs is not None:
         raw_pairs = raw_pairs.unionByName(hot_pairs)
 
-    if prune:
-        raw_pairs = _inline_prune_flags(raw_pairs)
-
-    # one pair per (ID_1, ID_2): earliest rule wins the attribution,
-    # overlap required only if EVERY producing rule required it
-    # (block.py:272-276)
-    aggs = [
-        F.min("rule_idx").alias("rule_idx"),
-        F.min(F.col("rto").cast("int")).cast("boolean").alias(
-            "require_title_overlap"
-        ),
-    ]
-    if prune:
-        aggs.append(F.first("_title_ok").alias("_title_ok"))
-    grouped = raw_pairs.groupBy("ID_1", "ID_2").agg(*aggs)
-    if prune:
-        grouped = grouped.filter(
-            F.col("_title_ok") | ~F.col("require_title_overlap")
-        ).select("ID_1", "ID_2", "rule_idx")
-    if refine_membership is not None:
-        grouped = _recover_attribution(grouped, refine_membership)
+    grouped = _prune_aggregate(raw_pairs, refine_membership)
     if id_map is not None:
         # map surviving pairs back to string ids (two joins over the
         # POST-prune survivors — tiny next to the raw stream) and restore
         # the reference's string-order pair orientation
-        rest = [c for c in grouped.columns if c not in ("ID_1", "ID_2")]
         grouped = (
             grouped.join(
                 id_map.select(
@@ -848,7 +807,7 @@ def candidate_pairs(
             .select(
                 F.least("_sid_1", "_sid_2").alias("ID_1"),
                 F.greatest("_sid_1", "_sid_2").alias("ID_2"),
-                *rest,
+                "rule_idx",
             )
         )
     return grouped
@@ -867,20 +826,11 @@ def _recover_attribution(
     refined hot groups — over survivors only, so both joins are
     post-prune-sized.
     """
-    m1 = membership.select(
-        F.col(C.ID).alias("ID_1"),
-        F.col("rule_idx").alias("_hr"),
-        "key",
-    )
-    m2 = membership.select(
-        F.col(C.ID).alias("ID_2"),
-        F.col("rule_idx").alias("_hr"),
-        "key",
-    )
+    m = membership.select(C.ID, F.col("rule_idx").alias("_hr"), "key")
     qual = (
         grouped.select("ID_1", "ID_2")
-        .join(m1, "ID_1")
-        .join(m2, ["ID_2", "_hr", "key"])
+        .join(m.withColumnRenamed(C.ID, "ID_1"), "ID_1")
+        .join(m.withColumnRenamed(C.ID, "ID_2"), ["ID_2", "_hr", "key"])
         .groupBy("ID_1", "ID_2")
         .agg(F.min("_hr").alias("_hr"))
     )
@@ -910,8 +860,8 @@ def _enrich(pruned_pairs: DataFrame, records_df: DataFrame) -> DataFrame:
     """Wide enrichment of ALREADY-PRUNED (ID_1, ID_2, rule_idx) pairs.
 
     Pruning happened inline in candidate generation (see
-    :func:`candidate_pairs` prune=True), so only surviving pairs — a tiny
-    fraction of raw candidates — pay the two 35-column record joins.
+    :func:`candidate_pairs`), so only surviving pairs — a tiny fraction
+    of raw candidates — pay the two 35-column record joins.
     """
     rule_names = F.array(
         *[F.lit(rule_name(fields)) for fields, _ in BLOCKING_RULES]
@@ -965,7 +915,6 @@ def block(
         max_block_size=max_block_size,
         cache=cache,
         hot_key_strategy=hot_key_strategy,
-        prune=True,
         surrogate_ids=surrogate_ids,
         refine_hot_keys=refine_hot_keys,
         cache_out=cache_out,
@@ -976,31 +925,17 @@ def block(
 
 def corpus_key_table(prepared_df: DataFrame) -> DataFrame:
     """Exploded blocking-key index
-    DataFrame[ID, rule_idx, rto, key, title, search_set].
+    DataFrame[ID, rule_idx, rto, key, _th, _sp, _tl, _nt, _tokh, _ss].
 
     The persistable index for incremental (delta) blocking: computing it
     once per record when the record ENTERS the corpus replaces
-    re-exploding the whole corpus every micro-batch. The (title,
-    search_set) payload lets block_delta prune candidates inline on the
-    join output without a record join.
+    re-exploding the whole corpus every micro-batch. These are the same
+    key rows :func:`candidate_pairs` joins (string IDs): the hashed
+    pruning payload (:func:`_carry_columns`) lets block_delta prune
+    candidates inline on the join output without a record join, and
+    without re-hashing corpus titles every batch.
     """
-    return (
-        prepared_df.filter(F.col(C.TITLE).isNotNull())
-        .select(
-            C.ID,
-            C.TITLE,
-            C.SEARCH_SET,
-            F.explode(_key_entries_column()).alias("entry"),
-        )
-        .select(
-            C.ID,
-            F.col("entry.rule_idx").alias("rule_idx"),
-            F.col("entry.rto").alias("rto"),
-            F.col("entry.key").alias("key"),
-            C.TITLE,
-            C.SEARCH_SET,
-        )
-    )
+    return _key_rows(prepared_df, F.col(C.ID))
 
 
 # Crossing-side refinement floor: a hot (rule, key) group is routed to
@@ -1030,146 +965,134 @@ CROSS_REFINE_COST_RATIO = 0.1
 def _refined_crossing_pairs(
     batch_keys: DataFrame,
     corpus_frames: list,
-    cand_rows: list,
-    nb_map: dict,
+    min_pairs: int,
+    salt_bucket_size: int,
     cache_out: list | None = None,
 ):
-    """Batch×corpus pairs for hot rto keys via the word-join machinery.
+    """Batch×corpus raw pairs of hot rto keys via the shared word join.
 
-    The batch×corpus analogue of :func:`_refined_hot_pairs`: wildcard ×
-    all in both directions, plus a TWO-directional prefix word join
-    (batch prefixes ⋈ corpus words AND corpus prefixes ⋈ batch words —
-    the superset guarantee needs the smaller-multiset side of each pair
-    to probe, and either side can be smaller). Prefix ranks use the
-    COMBINED group-local document frequency; per-key routing uses the
-    same exact emission estimate as candidate_pairs (Σ opposite-side
-    wdf over prefix rows vs REFINE_COST_RATIO × nb·nc) so dense
-    vocabularies fall back to the fan-out join, where the quadratic
-    output is the prune's own input and nothing can be saved.
+    Candidates are batch rto keys with ≥ CROSS_REFINE_MIN_NB batch
+    members (1 when ``min_pairs`` is 0) and a fan-out nb·nc ≥
+    ``min_pairs``. A candidate's batch and corpus rows form one refine
+    base, so prefix ranks use the COMBINED document frequency, and
+    :func:`_refined_hot_pairs` runs batch→corpus and corpus→batch.
 
-    Returns ``(raw_pair_rows, membership, routed_df)`` in the crossing
-    raw schema, or ``None`` when the cost model routed every candidate
-    back. The est collect is the only extra driver action and only runs
-    when candidates exist; the wdf chain it forces is recomputed once by
-    the downstream join (streaming keeps no caches per batch).
+    The routing estimate (Σ over prefix rows of the opposite side's
+    document frequency, against CROSS_REFINE_COST_RATIO × nb·nc) reads a
+    DETERMINISTIC 1/16 record sample scaled ×16: the wdf aggregation
+    stays full, but the per-record prefix windows run over sampled
+    records only, so a batch whose keys route BACK pays little for
+    having asked. A key whose batch or corpus side has no sampled
+    non-wildcard record is estimated from all its records instead: the
+    blind side would read as 0 and could send a dense key to the word
+    join.
+
+    Returns ``(raw_pairs, membership, routed_df)``, or ``None`` when no
+    key is a candidate or every candidate routes back. With
+    ``cache_out`` the refine base (group-sized) is persisted so its
+    consumers do not each re-scan the corpus index; the CALLER
+    unpersists it after the batch.
     """
-    spark = batch_keys.sparkSession
-    cand_df = F.broadcast(
-        spark.createDataFrame(
-            [(r, k) for (r, k) in cand_rows], schema="rule_idx int, key string"
-        )
-    )
-    hb_raw = batch_keys.join(cand_df, ["rule_idx", "key"], "semi")
-    hc_raw = corpus_frames[0].join(cand_df, ["rule_idx", "key"], "semi")
-    for extra in corpus_frames[1:]:
-        hc_raw = hc_raw.unionByName(
-            extra.join(cand_df, ["rule_idx", "key"], "semi").select(
-                *hc_raw.columns
-            )
-        )
-    if cache_out is not None:
-        # the hot-group tables feed the est collect, the four pair
-        # branches, and the membership recovery — without a persist each
-        # consumer re-SCANS the whole (growing) corpus key index, which
-        # made per-batch cost grow faster than the fan-out it replaces
-        # (measured). The semi-joined frames are group-sized, tiny next
-        # to the index; the CALLER unpersists after the batch (streaming
-        # cache_out convention).
-        from pyspark.storagelevel import StorageLevel
-
-        hb_raw = hb_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        hc_raw = hc_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        cache_out.extend([hb_raw, hc_raw])
-
-    def _gen(df: DataFrame, p: str, with_rto: bool) -> DataFrame:
-        toks = F.filter(F.split(F.col(C.TITLE), " "), lambda x: x != "")
-        out = df.select(
-            "rule_idx",
-            *(["rto"] if with_rto else []),
-            "key",
-            F.col(C.ID).alias(f"_{p}id"),
-            F.col(C.TITLE).alias(f"_{p}title"),
-            F.col(C.SEARCH_SET).alias(f"_{p}ss"),
-            F.array_distinct(
-                F.transform(toks, lambda x: F.xxhash64(x))
-            ).alias(f"_{p}tokh"),
-        )
-        return out.withColumn(
-            f"_{p}wc",
-            (~F.col(f"_{p}title").contains(" "))
-            | (F.size(f"_{p}tokh") == 0),
-        ).withColumn(f"_{p}d", F.size(f"_{p}tokh"))
-
-    b_side = _gen(hb_raw, "b", True)
-    c_side = _gen(hc_raw, "c", False)
-
-    wb = b_side.filter(~F.col("_bwc")).select(
-        "rule_idx", "rto", "key", "_bid", "_btitle", "_bss", "_bd",
-        F.explode("_btokh").alias("_w"),
-    )
-    wc_r = c_side.filter(~F.col("_cwc")).select(
-        "rule_idx", "key", "_cid", "_ctitle", "_css", "_cd",
-        F.explode("_ctokh").alias("_w"),
-    )
-    # one aggregation carries the combined df (prefix ranking) and the
-    # per-side dfs (the emission estimate needs the OPPOSITE side's df)
-    tagged = wb.select(
-        "rule_idx", "key", "_w", F.lit(1).alias("_isb")
-    ).unionByName(
-        wc_r.select("rule_idx", "key", "_w", F.lit(0).alias("_isb"))
-    )
-    wdf = tagged.groupBy("rule_idx", "key", "_w").agg(
-        F.count("*").alias("_wdf"),
-        F.sum("_isb").alias("_wb_df"),
-        (F.count("*") - F.sum("_isb")).alias("_wc_df"),
-    )
-    win_b = Window.partitionBy("rule_idx", "key", "_bid").orderBy(
-        "_wdf", "_w"
-    )
-    win_c = Window.partitionBy("rule_idx", "key", "_cid").orderBy(
-        "_wdf", "_w"
-    )
-
-    def _prefix(words_df, win, d_col):
-        return (
-            words_df.join(wdf, ["rule_idx", "key", "_w"])
-            .withColumn("_rank", F.row_number().over(win))
-            .filter(F.col("_rank") <= F.floor((F.col(d_col) - 1) / 2) + 1)
-        )
-
-    # routing estimate from a DETERMINISTIC 1/16 record sample per side:
-    # the wdf aggregation stays full (document frequencies must be
-    # exact), but the per-record rarest-prefix windows — the expensive
-    # part of the chain — run over sampled records only, so a batch
-    # whose keys the router sends BACK to the fan-out join pays almost
-    # nothing for having asked. The estimate only picks a physical
-    # plan; both branches are exact.
     mod = 16
-    est_rows = (
-        _prefix(
-            wb.filter(F.pmod(F.xxhash64(F.col("_bid")), mod) == 0),
-            win_b,
-            "_bd",
-        ).select("rule_idx", "key", F.col("_wc_df").alias("_e"))
-        .unionByName(
-            _prefix(
-                wc_r.filter(F.pmod(F.xxhash64(F.col("_cid")), mod) == 0),
-                win_c,
-                "_cd",
-            ).select("rule_idx", "key", F.col("_wb_df").alias("_e"))
-        )
+    sampled = (F.pmod(F.xxhash64(C.ID), mod) == 0) & F.col("_sp") & (
+        F.col("_nt") > 0
+    )
+    min_nb = CROSS_REFINE_MIN_NB if min_pairs > 0 else 1
+    # driver round-trip 1: batch-side member counts per rto key — tiny
+    # (the batch is the small side by construction) and gated so healthy
+    # batches pay ONLY this one cheap aggregation
+    nb_rows = (
+        batch_keys.filter(F.col("rule_idx").isin(sorted(_RTO_RULE_IDXS)))
         .groupBy("rule_idx", "key")
-        .agg(F.sum("_e").alias("_est"))
+        .agg(
+            F.count("*").alias("_nb"),
+            F.sum(sampled.cast("int")).alias("_nbs"),
+        )
+        .filter(F.col("_nb") >= min_nb)
+        .limit(HOT_KEY_COLLECT_LIMIT + 1)
         .collect()
     )
+    if not nb_rows or len(nb_rows) > HOT_KEY_COLLECT_LIMIT:
+        return None
+    spark = batch_keys.sparkSession
+    nb_only = {(r["rule_idx"], r["key"]): r for r in nb_rows}
+    bk_df = F.broadcast(
+        spark.createDataFrame(list(nb_only), schema="rule_idx int, key string")
+    )
+    # driver round-trip 2 (only when a batch key looked hot): corpus-side
+    # member counts, restricted to those keys
+    corpus = reduce(
+        DataFrame.unionByName,
+        [c.select(*batch_keys.columns) for c in corpus_frames],
+    )
+    nc_rows = (
+        corpus.join(bk_df, ["rule_idx", "key"], "semi")
+        .groupBy("rule_idx", "key")
+        .agg(
+            F.count("*").alias("_nc"),
+            F.sum(sampled.cast("int")).alias("_ncs"),
+        )
+        .collect()
+    )
+    nb_map, blind = {}, []
+    for r in nc_rows:
+        rk = (r["rule_idx"], r["key"])
+        b = nb_only[rk]
+        if b["_nb"] * r["_nc"] >= min_pairs:
+            nb_map[rk] = (b["_nb"], r["_nc"])
+            if not (b["_nbs"] and r["_ncs"]):
+                blind.append(f"{rk[0]}{_KEY_SEP}{rk[1]}")
+    if not nb_map:
+        return None
+
+    cand = spark.createDataFrame(
+        [(r, k, nb + nc) for (r, k), (nb, nc) in nb_map.items()],
+        schema="rule_idx int, key string, _block_n long",
+    )
+    base = _refine_base(
+        batch_keys.withColumn("_isb", F.lit(True)), cand
+    ).unionByName(
+        _refine_base(corpus.withColumn("_isb", F.lit(False)), cand)
+    )
+    if cache_out is not None:
+        from pyspark.storagelevel import StorageLevel
+
+        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+        cache_out.append(base)
+    words, prefix = _word_prefix_tables(base)
+
+    # the sample predicate reads only the prefix window's partition
+    # columns (rule_idx, key, ID), so it is pushed below the window and
+    # only sampled (or blind-key) records are ranked
+    is_blind = F.concat_ws(
+        _KEY_SEP, F.col("rule_idx").cast("string"), F.col("key")
+    ).isin(blind)
+    batch_df = (
+        words.filter("_isb")
+        .groupBy("rule_idx", "key", "_w")
+        .agg(F.count("*").alias("_bdf"))
+    )
+    opposite_df = F.when(
+        F.col("_isb"), F.col("_wdf") - F.coalesce("_bdf", F.lit(0))
+    ).otherwise(F.coalesce("_bdf", F.lit(0)))
     est = {
-        (r["rule_idx"], r["key"]): r["_est"] * mod for r in est_rows
+        (r["rule_idx"], r["key"]): r["_est"]
+        for r in prefix.filter(
+            (F.pmod(F.xxhash64(C.ID), mod) == 0) | is_blind
+        )
+        .join(batch_df, ["rule_idx", "key", "_w"], "left")
+        .groupBy("rule_idx", "key")
+        .agg(
+            F.sum(
+                opposite_df * F.when(is_blind, 1).otherwise(mod)
+            ).alias("_est")
+        )
+        .collect()
     }
     routed = [
         rk
-        for rk in cand_rows
-        if est.get(rk, 0)
-        < CROSS_REFINE_COST_RATIO * nb_map[rk][0] * nb_map[rk][1]
+        for rk, (nb, nc) in nb_map.items()
+        if est.get(rk, 0) < CROSS_REFINE_COST_RATIO * nb * nc
     ]
     import os as _os
 
@@ -1178,7 +1101,7 @@ def _refined_crossing_pairs(
 
         print(
             "[cross-refine] cand="
-            + repr([(rk, nb_map[rk], est.get(rk, 0)) for rk in cand_rows])
+            + repr([(rk, nbc, est.get(rk, 0)) for rk, nbc in nb_map.items()])
             + f" routed={len(routed)}",
             file=_sys.stderr,
             flush=True,
@@ -1188,78 +1111,21 @@ def _refined_crossing_pairs(
     routed_df = F.broadcast(
         spark.createDataFrame(routed, schema="rule_idx int, key string")
     )
-
-    def _routed(df: DataFrame) -> DataFrame:
-        # _wdf and the prefix rank are group-local to (rule_idx, key):
-        # filtering the prebuilt tables to the routed subset is
-        # bit-identical to rebuilding them from it
-        return df.join(routed_df, ["rule_idx", "key"], "semi")
-
-    b_side, c_side = _routed(b_side), _routed(c_side)
-    wb, wc_r = _routed(wb), _routed(wc_r)
-    # the real (full) prefix tables are only built for ROUTED keys — a
-    # fallback decision never pays for the per-record windows
-    pb = _prefix(wb, win_b, "_bd")
-    pc = _prefix(wc_r, win_c, "_cd")
-
-    swap = F.col("_bid") > F.col("_cid")
-
-    def _proj(df: DataFrame) -> DataFrame:
-        return df.filter(F.col("_bid") != F.col("_cid")).select(
-            F.least("_bid", "_cid").alias("ID_1"),
-            F.greatest("_bid", "_cid").alias("ID_2"),
-            "rule_idx",
-            "rto",
-            F.when(swap, F.col("_ctitle"))
-            .otherwise(F.col("_btitle"))
-            .alias("_title_1"),
-            F.when(swap, F.col("_btitle"))
-            .otherwise(F.col("_ctitle"))
-            .alias("_title_2"),
-            F.when(swap, F.col("_css"))
-            .otherwise(F.col("_bss"))
-            .alias("_ss_1"),
-            F.when(swap, F.col("_bss"))
-            .otherwise(F.col("_css"))
-            .alias("_ss_2"),
-        )
-
-    # wildcard passes: batch wildcards × whole corpus group, corpus
-    # wildcards × batch non-wildcards (each unordered pair once)
-    wc1 = b_side.filter("_bwc").join(c_side, ["rule_idx", "key"])
-    wc2 = b_side.filter(~F.col("_bwc")).join(
-        c_side.filter("_cwc"), ["rule_idx", "key"]
+    base, words, prefix = (
+        df.join(routed_df, ["rule_idx", "key"], "semi")
+        for df in (base, words, prefix)
     )
-    dir1 = pb.select(
-        "rule_idx", "rto", "key", "_w", "_bid", "_btitle", "_bss"
-    ).join(
-        wc_r.select("rule_idx", "key", "_w", "_cid", "_ctitle", "_css"),
-        ["rule_idx", "key", "_w"],
-    )
-    dir2 = pc.select(
-        "rule_idx", "key", "_w", "_cid", "_ctitle", "_css"
-    ).join(
-        wb.select(
-            "rule_idx", "rto", "key", "_w", "_bid", "_btitle", "_bss"
-        ),
-        ["rule_idx", "key", "_w"],
-    )
-    raw = (
-        _proj(wc1)
-        .unionByName(_proj(wc2))
-        .unionByName(_proj(dir1))
-        .unionByName(_proj(dir2))
-    )
-    membership = (
-        hb_raw.join(routed_df, ["rule_idx", "key"], "semi")
-        .select(C.ID, "rule_idx", "key")
-        .unionByName(
-            hc_raw.join(routed_df, ["rule_idx", "key"], "semi").select(
-                C.ID, "rule_idx", "key"
-            )
+    b, c = base.filter("_isb"), base.filter(~F.col("_isb"))
+    raw = _refined_hot_pairs(
+        b, c, prefix.filter("_isb"), words.filter(~F.col("_isb")),
+        salt_bucket_size,
+    ).unionByName(
+        _refined_hot_pairs(
+            c, b, prefix.filter(~F.col("_isb")), words.filter("_isb"),
+            salt_bucket_size,
         )
     )
-    return raw, membership, routed_df
+    return raw, base.select(C.ID, "rule_idx", "key"), routed_df
 
 
 def block_delta(
@@ -1279,9 +1145,13 @@ def block_delta(
     Produces exactly ``block(corpus ∪ batch)`` restricted to pairs that
     touch the batch, without touching corpus×corpus again and — the
     scale point — WITHOUT re-exploding the corpus: candidate generation
-    is an equi-join of the batch key table against the persisted
-    ``corpus_keys`` index. At 10^12 corpus rows each micro-batch costs
-    O(|batch| + matching key groups), not O(|corpus|).
+    is an equi-join of the batch key rows against the persisted
+    ``corpus_keys`` index (:func:`corpus_key_table`, the same key-row
+    schema and hashed payload the in-corpus path joins). At 10^12 corpus
+    rows each micro-batch costs O(|batch| + matching key groups), not
+    O(|corpus|). Crossing raw pairs take the in-corpus orientation
+    (least/greatest ID, payload swapped alongside) and go through the
+    same prune + aggregate step (:func:`_prune_aggregate`).
 
     ``broadcast_batch=True`` (micro-batch default) hints the batch side
     broadcast — zero exchange anywhere. For LARGE batches (backfills)
@@ -1304,17 +1174,18 @@ def block_delta(
       the within-batch part delegates to :func:`candidate_pairs`' salted
       self-join (identical pair set, bounded join groups). For the
       crossing side, hot require-title-overlap keys above the fan-out
-      floor route through :func:`_refined_crossing_pairs` (two-
-      directional prefix word join + wildcard passes, est-gated by
-      CROSS_REFINE_COST_RATIO with the exact downstream prune and the
+      floor route through :func:`_refined_crossing_pairs` (the shared
+      AllPairs generator probed in both directions, est-gated by
+      CROSS_REFINE_COST_RATIO, with the exact downstream prune and the
       attribution-recovery join — pair set identical, pinned by
-      test_block_delta_crossing_refinement_matches_combined); measured
-      1.5× at a 1500×12000 entropic-title degenerate key and growing
-      with the corpus, while dense-vocabulary keys (word join emission
-      ≥ ~10% of the fan-out) stay on the fan-out join, which remains
-      the cheaper exact plan there. ``refine_hot_keys=False`` or a huge
+      test_block_delta_crossing_refinement_matches_combined and the
+      block_delta fuzz differential); measured 1.5× at a 1500×12000
+      entropic-title degenerate key and growing with the corpus, while
+      dense-vocabulary keys (word join emission ≥ ~10% of the fan-out)
+      stay on the fan-out join, which remains the cheaper exact plan
+      there. ``refine_hot_keys=False`` or a huge
       ``crossing_refine_min_pairs`` restores the pure fan-out.
-      ``cache_out`` collects the refinement's per-batch persists for
+      ``cache_out`` collects the refinement's per-batch persist for
       the caller to release (streaming convention).
     - ``"drop"``: keys whose COMBINED (corpus + batch [+ fresh])
       membership exceeds ``max_block_size`` are dropped from BOTH sides —
@@ -1326,195 +1197,71 @@ def block_delta(
     joins read co-located buckets.
     """
     batch_keys = corpus_key_table(batch_prepared)
+    corpus_frames = [corpus_keys]
+    if fresh_corpus_keys is not None:
+        corpus_frames.append(fresh_corpus_keys)
 
     if max_block_size is not None and hot_key_strategy == "drop":
         # combined membership counts: one slim aggregation over the key
         # tables (2 int/short-string columns), matching the hot set the
         # combined block-with-drop would compute
-        sides = [batch_keys, corpus_keys]
-        if fresh_corpus_keys is not None:
-            sides.append(fresh_corpus_keys)
-        combined = sides[0].select("rule_idx", "key")
-        for s in sides[1:]:
-            combined = combined.unionByName(s.select("rule_idx", "key"))
         hot = F.broadcast(
-            combined.groupBy("rule_idx", "key")
+            reduce(
+                DataFrame.unionByName,
+                [f.select("rule_idx", "key") for f in [batch_keys, *corpus_frames]],
+            )
+            .groupBy("rule_idx", "key")
             .agg(F.count("*").alias("_n"))
             .filter(F.col("_n") > max_block_size)
             .select("rule_idx", "key")
         )
-        batch_keys = batch_keys.join(hot, ["rule_idx", "key"], "left_anti")
-        corpus_keys = corpus_keys.join(hot, ["rule_idx", "key"], "left_anti")
-        if fresh_corpus_keys is not None:
-            fresh_corpus_keys = fresh_corpus_keys.join(
-                hot, ["rule_idx", "key"], "left_anti"
-            )
-
-    def _side(df: DataFrame, side: str, with_rto: bool) -> DataFrame:
-        cols = [
-            F.col(C.ID).alias(f"ID_{side}"),
-            F.col("rule_idx"),
-            F.col("key"),
-            F.col(C.TITLE).alias(f"_title_{side}"),
-            F.col(C.SEARCH_SET).alias(f"_ss_{side}"),
-        ]
-        if with_rto:
-            cols.insert(2, F.col("rto"))
-        return df.select(*cols)
-
-    def _within() -> DataFrame:
-        return (
-            _side(batch_keys, "1", True)
-            .join(_side(batch_keys, "2", False), ["rule_idx", "key"])
-            .filter(F.col("ID_1") < F.col("ID_2"))
-            .select("ID_1", "ID_2", "rule_idx", "rto", "_title_1",
-                    "_title_2", "_ss_1", "_ss_2")
+        batch_keys, *corpus_frames = (
+            f.join(hot, ["rule_idx", "key"], "left_anti")
+            for f in [batch_keys, *corpus_frames]
         )
 
-    # -------- crossing-side hot-key refinement (salt mode) ------------
     # A DEGENERATE hot rto key fans each batch member out against the
     # whole corpus-side key group: O(|batch∩key| · |corpus∩key|) raw
     # rows per batch, growing with the corpus (measured 19→82 s/batch
-    # over 6 batches on the degenerate probe). For hot rto keys above
-    # the fan-out floor, pair generation switches to the same
-    # AllPairs-style machinery candidate_pairs uses, adapted to the
-    # batch×corpus shape: wildcard×all in both directions plus a
-    # TWO-directional prefix word join (batch prefixes ⋈ corpus words
-    # and corpus prefixes ⋈ batch words — the superset guarantee needs
-    # the smaller-multiset side of each pair to probe, and either side
-    # can be smaller). The exact overlap prune still runs downstream
-    # and attribution is restored by the same post-prune recovery join,
-    # so the pair set equals block(corpus ∪ batch) restricted to
-    # batch-touching pairs (pinned by test_block_delta_refine).
-    refine_cross = (
+    # over 6 batches on the degenerate probe).
+    refined = None
+    if (
         refine_hot_keys
         and max_block_size is not None
         and hot_key_strategy == "salt"
-    )
-    hot_cross = None
-    cross_membership = None
-    hot_raw_pairs = None
-    if refine_cross:
-        min_pairs = (
+    ):
+        refined = _refined_crossing_pairs(
+            batch_keys,
+            corpus_frames,
             CROSS_REFINE_MIN_PAIRS
             if crossing_refine_min_pairs is None
-            else crossing_refine_min_pairs
+            else crossing_refine_min_pairs,
+            min(max_block_size, SALT_BUCKET_SIZE),
+            cache_out=cache_out,
         )
-        min_nb = CROSS_REFINE_MIN_NB if min_pairs > 0 else 1
-        rto_list = sorted(_RTO_RULE_IDXS)
-        # driver round-trip 1: batch-side member counts per rto key —
-        # tiny (the batch is the small side by construction) and gated
-        # so healthy batches pay ONLY this one cheap aggregation
-        nb_rows = (
-            batch_keys.filter(F.col("rule_idx").isin(rto_list))
-            .groupBy("rule_idx", "key")
-            .agg(F.count("*").alias("_nb"))
-            .filter(F.col("_nb") >= min_nb)
-            .limit(HOT_KEY_COLLECT_LIMIT + 1)
-            .collect()
-        )
-        if nb_rows and len(nb_rows) <= HOT_KEY_COLLECT_LIMIT:
-            spark = batch_prepared.sparkSession
-            nb_only = {(r["rule_idx"], r["key"]): r["_nb"] for r in nb_rows}
-            bk_df = spark.createDataFrame(
-                list(nb_only), schema="rule_idx int, key string"
-            )
-            csides = [corpus_keys]
-            if fresh_corpus_keys is not None:
-                csides.append(fresh_corpus_keys)
-            cunion = csides[0].select("rule_idx", "key")
-            for s in csides[1:]:
-                cunion = cunion.unionByName(s.select("rule_idx", "key"))
-            # driver round-trip 2 (only when a batch key looked hot):
-            # corpus-side member counts, restricted to those keys
-            nc_rows = (
-                cunion.join(F.broadcast(bk_df), ["rule_idx", "key"], "semi")
-                .groupBy("rule_idx", "key")
-                .agg(F.count("*").alias("_nc"))
-                .collect()
-            )
-            nb_map = {
-                (r["rule_idx"], r["key"]): (
-                    nb_only[(r["rule_idx"], r["key"])],
-                    r["_nc"],
-                )
-                for r in nc_rows
-            }
-            cand_rows = [
-                rk for rk, (nb, nc) in nb_map.items()
-                if nb * nc >= min_pairs
-            ]
-            if cand_rows:
-                refined_out = _refined_crossing_pairs(
-                    batch_keys, csides, cand_rows, nb_map,
-                    cache_out=cache_out,
-                )
-                if refined_out is not None:
-                    hot_raw_pairs, cross_membership, hot_cross = refined_out
+    hot_raw_pairs, cross_membership, hot_cross = refined or (None,) * 3
 
-    def _crossing(index_df: DataFrame, hint_broadcast: bool) -> DataFrame:
-        cold_batch_keys = batch_keys
-        if hot_cross is not None:
-            # hot keys leave the fan-out join (their pairs come from the
-            # refined generator below); excluding the batch side alone
-            # removes the key from the equi-join
-            cold_batch_keys = batch_keys.join(
-                hot_cross, ["rule_idx", "key"], "left_anti"
-            )
-        probe = (
-            F.broadcast(cold_batch_keys) if hint_broadcast else cold_batch_keys
-        )
-        joined = probe.join(
-            index_df.select(
-                F.col(C.ID).alias("_cid"),
-                "rule_idx",
-                "key",
-                F.col(C.TITLE).alias("_ctitle"),
-                F.col(C.SEARCH_SET).alias("_css"),
-            ),
-            ["rule_idx", "key"],
-        ).filter(F.col(C.ID) != F.col("_cid"))
-        swap = F.col(C.ID) > F.col("_cid")
-        return joined.select(
-            F.least(C.ID, "_cid").alias("ID_1"),
-            F.greatest(C.ID, "_cid").alias("ID_2"),
-            "rule_idx",
-            "rto",
-            F.when(swap, F.col("_ctitle")).otherwise(F.col(C.TITLE)).alias(
-                "_title_1"
-            ),
-            F.when(swap, F.col(C.TITLE)).otherwise(F.col("_ctitle")).alias(
-                "_title_2"
-            ),
-            F.when(swap, F.col("_css")).otherwise(F.col(C.SEARCH_SET)).alias(
-                "_ss_1"
-            ),
-            F.when(swap, F.col(C.SEARCH_SET)).otherwise(F.col("_css")).alias(
-                "_ss_2"
-            ),
-        )
-
-    crossing = _crossing(corpus_keys, broadcast_batch)
-    if fresh_corpus_keys is not None:
-        crossing = crossing.unionByName(_crossing(fresh_corpus_keys, True))
-
+    probe = batch_keys
+    if hot_cross is not None:
+        # hot keys leave the fan-out join (their pairs come from the
+        # refined generator); excluding the batch side alone removes the
+        # key from the equi-join
+        probe = batch_keys.join(hot_cross, ["rule_idx", "key"], "left_anti")
+    probe = _sided(probe, "l", ("rule_idx", "rto", "key"))
+    # the bulk index joins with the caller's broadcast choice; the fresh
+    # appends always against the broadcast batch
+    crossing = reduce(
+        DataFrame.unionByName,
+        [
+            (F.broadcast(probe) if i or broadcast_batch else probe)
+            .join(_sided(f, "r", ("rule_idx", "key")), ["rule_idx", "key"])
+            .filter(F.col("ID_l") != F.col("ID_r"))
+            .select(*_oriented_cols())
+            for i, f in enumerate(corpus_frames)
+        ],
+    )
     if hot_raw_pairs is not None:
         crossing = crossing.unionByName(hot_raw_pairs)
-
-    def _agg_prune(raw: DataFrame) -> DataFrame:
-        return (
-            _inline_prune_flags(raw)
-            .groupBy("ID_1", "ID_2")
-            .agg(
-                F.min("rule_idx").alias("rule_idx"),
-                F.min(F.col("rto").cast("int")).cast("boolean").alias(
-                    "require_title_overlap"
-                ),
-                F.first("_title_ok").alias("_title_ok"),
-            )
-            .filter(F.col("_title_ok") | ~F.col("require_title_overlap"))
-            .select("ID_1", "ID_2", "rule_idx")
-        )
 
     if max_block_size is not None and hot_key_strategy == "salt":
         # within-batch pairs via the salted generator (identical pair
@@ -1525,14 +1272,12 @@ def block_delta(
             max_block_size=max_block_size,
             cache=False,
             hot_key_strategy="salt",
-            prune=True,
         )
-        cross_pairs = _agg_prune(crossing)
-        if cross_membership is not None:
-            cross_pairs = _recover_attribution(cross_pairs, cross_membership)
-        pairs = within_pairs.unionByName(cross_pairs)
+        pairs = within_pairs.unionByName(
+            _prune_aggregate(crossing, cross_membership)
+        )
     else:
-        pairs = _agg_prune(_within().unionByName(crossing))
+        pairs = _prune_aggregate(_self_join(batch_keys).unionByName(crossing))
 
     all_records = corpus_records.unionByName(
         batch_prepared.select(*corpus_records.columns)

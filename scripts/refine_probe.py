@@ -74,10 +74,11 @@ def inner(n_base: int, vocab: str, refine: bool) -> None:
         REFINE_MIN_QUAD_PAIRS,
         SALT_BUCKET_SIZE,
         _RTO_RULE_IDXS,
+        _refine_base,
+        _word_prefix_tables,
         block,
         blocking_key_stats,
         corpus_key_table,
-        word_join_cost,
     )
     from bib_dedupe_spark.sources.synthetic import generate
 
@@ -130,28 +131,19 @@ def inner(n_base: int, vocab: str, refine: bool) -> None:
         ).withColumnRenamed("group_size", "_block_n")
         hot_rows = hot.collect()
         if hot_rows:
-            title = F.col("title")
-            toks = F.filter(F.split(title, " "), lambda x: x != "")
-            keys = corpus_key_table(prepared).select(
-                "ID",
-                "rule_idx",
-                "rto",
-                "key",
-                F.xxhash64(title).alias("_th"),
-                title.contains(" ").alias("_sp"),
-                F.length(title).alias("_tl"),
-                F.size(toks).alias("_nt"),
-                F.array_distinct(
-                    F.transform(toks, lambda x: F.xxhash64(x))
-                ).alias("_tokh"),
-                F.col("search_set").alias("_ss"),
-            )
-            est_df = word_join_cost(
-                keys, spark.createDataFrame(hot_rows, schema=hot.schema)
+            # the same per-key emission estimate candidate_pairs routes on:
+            # Σ _wdf over the prefix rows of each hot group
+            _words, prefix = _word_prefix_tables(
+                _refine_base(
+                    corpus_key_table(prepared),
+                    spark.createDataFrame(hot_rows, schema=hot.schema),
+                )
             )
             est = {
                 (r["rule_idx"], r["key"]): r["_est"]
-                for r in est_df.collect()
+                for r in prefix.groupBy("rule_idx", "key")
+                .agg(F.sum("_wdf").alias("_est"))
+                .collect()
             }
             routed = fallback = 0
             raw_hot = est_word = 0

@@ -93,14 +93,13 @@ def test_refined_salted_unsalted_differential_fuzz(spark, master_seed):
     prepared.count()
 
     truth = _pairs(
-        candidate_pairs(prepared, max_block_size=None, prune=True)
+        candidate_pairs(prepared, max_block_size=None)
     )
     salted = _pairs(
         candidate_pairs(
             prepared,
             max_block_size=8,
             hot_key_strategy="salt",
-            prune=True,
             refine_hot_keys=False,
         )
     )
@@ -109,7 +108,6 @@ def test_refined_salted_unsalted_differential_fuzz(spark, master_seed):
             prepared,
             max_block_size=8,
             hot_key_strategy="salt",
-            prune=True,
             refine_hot_keys=True,
             refine_min_quad=0,
         )

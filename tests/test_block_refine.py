@@ -71,7 +71,7 @@ def _pairs(df):
 def truth(refine_prepared):
     """Unsalted, unrefined pruned pair set — the semantic ground truth."""
     return _pairs(
-        candidate_pairs(refine_prepared, max_block_size=None, prune=True)
+        candidate_pairs(refine_prepared, max_block_size=None)
     )
 
 
@@ -81,7 +81,6 @@ def test_refined_equals_unrefined_and_unsalted(refine_prepared, truth):
             refine_prepared,
             max_block_size=10,
             hot_key_strategy="salt",
-            prune=True,
             refine_hot_keys=True,
             refine_min_quad=0,
         )
@@ -91,7 +90,6 @@ def test_refined_equals_unrefined_and_unsalted(refine_prepared, truth):
             refine_prepared,
             max_block_size=10,
             hot_key_strategy="salt",
-            prune=True,
             refine_hot_keys=False,
         )
     )
@@ -109,7 +107,7 @@ def test_refinement_actually_engaged(refine_prepared, monkeypatch):
 
     monkeypatch.setattr(block_mod, "_refined_hot_pairs", spy)
     candidate_pairs(
-        refine_prepared, max_block_size=10, prune=True, refine_min_quad=0
+        refine_prepared, max_block_size=10, refine_min_quad=0
     ).collect()
     assert calls, "hot rto group did not route through the refined path"
 
@@ -146,12 +144,12 @@ def test_dense_vocabulary_group_falls_back_to_salt(spark, monkeypatch):
     monkeypatch.setattr(block_mod, "_refined_hot_pairs", spy)
     refined = _pairs(
         candidate_pairs(
-            prepared, max_block_size=10, prune=True, refine_min_quad=0
+            prepared, max_block_size=10, refine_min_quad=0
         )
     )
     assert not calls, "dense group should have routed back to salt"
     truth = _pairs(
-        candidate_pairs(prepared, max_block_size=None, prune=True)
+        candidate_pairs(prepared, max_block_size=None)
     )
     assert refined == truth
     prepared.unpersist()
@@ -163,7 +161,7 @@ def test_attribution_recovery_for_skipped_pairs(refine_prepared, truth):
     rules, even though the word join never emits it."""
     refined = _pairs(
         candidate_pairs(
-            refine_prepared, max_block_size=10, prune=True,
+            refine_prepared, max_block_size=10,
             refine_min_quad=0,
         )
     )
@@ -176,7 +174,7 @@ def test_attribution_recovery_for_skipped_pairs(refine_prepared, truth):
 def test_wildcards_pair_with_whole_group(refine_prepared, truth):
     refined = _pairs(
         candidate_pairs(
-            refine_prepared, max_block_size=10, prune=True,
+            refine_prepared, max_block_size=10,
             refine_min_quad=0,
         )
     )
@@ -195,7 +193,7 @@ def test_wildcards_pair_with_whole_group(refine_prepared, truth):
 def test_disjoint_title_pairs_still_pruned(refine_prepared):
     refined = _pairs(
         candidate_pairs(
-            refine_prepared, max_block_size=10, prune=True,
+            refine_prepared, max_block_size=10,
             refine_min_quad=0,
         )
     )
@@ -230,7 +228,6 @@ def test_cache_out_shares_prefix_table(refine_prepared, truth):
     out = candidate_pairs(
         refine_prepared,
         max_block_size=10,
-        prune=True,
         cache_out=caches,
         refine_min_quad=0,
     )

@@ -48,14 +48,19 @@ def skewed_prepared(spark):
 
 
 def _pair_set(df):
-    return {
-        (r["ID_1"], r["ID_2"], r["rule_idx"], r["require_title_overlap"])
-        for r in df.collect()
-    }
+    """Pruned (ID_1, ID_2, rule_idx) set; candidate_pairs always prunes."""
+    return {(r["ID_1"], r["ID_2"], r["rule_idx"]) for r in df.collect()}
+
+
+def _hot_key_pairs(pairs):
+    """Pairs inside the 40-record hot group: they must survive pruning,
+    or a salted/dropped comparison would say nothing about hot keys."""
+    return {p for p in pairs if p[0].startswith("h") and p[1].startswith("h")}
 
 
 def test_salted_equals_unsalted(skewed_prepared):
     unlimited = _pair_set(candidate_pairs(skewed_prepared, max_block_size=None))
+    assert _hot_key_pairs(unlimited)
     salted = _pair_set(
         candidate_pairs(
             skewed_prepared, max_block_size=10, hot_key_strategy="salt"
@@ -69,12 +74,14 @@ def test_salted_equals_unsalted(skewed_prepared):
 
 def test_drop_strategy_removes_hot_pairs(skewed_prepared):
     unlimited = _pair_set(candidate_pairs(skewed_prepared, max_block_size=None))
+    assert _hot_key_pairs(unlimited)
     dropped = _pair_set(
         candidate_pairs(
             skewed_prepared, max_block_size=10, hot_key_strategy="drop"
         )
     )
     assert dropped < unlimited
+    assert not _hot_key_pairs(dropped)
 
 
 def test_block_delta_equals_combined_restriction(spark):
@@ -269,6 +276,7 @@ def test_salt_bucket_size_decoupled(skewed_prepared):
     the unsalted pair set, and groups between the bucket size and
     max_block_size route through the salted join too."""
     unlimited = _pair_set(candidate_pairs(skewed_prepared, max_block_size=None))
+    assert _hot_key_pairs(unlimited)
     for bucket in (3, 7, 100):
         salted = _pair_set(
             candidate_pairs(
@@ -414,3 +422,105 @@ def test_block_delta_crossing_refinement_matches_combined(spark):
     # is attributed to an rto rule despite failing the overlap prune
     doi_pair = [p for p in want if {p[0], p[1]} == {"X074", "X075"}]
     assert doi_pair, "same-DOI crossing pair missing"
+
+
+def test_crossing_estimate_blind_batch_side_routes_to_fanout(
+    spark, monkeypatch
+):
+    """The crossing router estimates from a 1/16 record sample. A key
+    whose 8 batch members are all outside the sample used to read its
+    batch→corpus emission as 0 and go to the word join although every
+    batch title shares a word with every corpus title. Such a key is now
+    estimated from all its records, so it stays on the fan-out join; the
+    pair set is the same either way."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from bib_dedupe_spark import block as block_fn
+    from bib_dedupe_spark import prep
+    from bib_dedupe_spark.operators import block as block_mod
+    from bib_dedupe_spark.operators.block import block_delta, corpus_key_table
+
+    ids = spark.createDataFrame([(f"B{i:03d}",) for i in range(64)], "ID string")
+    batch_ids = [
+        r["ID"]
+        for r in ids.filter(F.pmod(F.xxhash64("ID"), 16) != 0)
+        .orderBy("ID")
+        .limit(8)
+        .collect()
+    ]
+    letters = "abcdefghijklmnopqrstuvwxyz"
+
+    def rec(rid, title):
+        return {
+            "ID": rid,
+            "ENTRYTYPE": "article",
+            "author": "Shared, Sam",
+            "title": title,
+            "journal": f"venue {rid}",
+            "year": "2021",
+            "volume": "",
+            "number": "",
+            "pages": "",
+            "abstract": "",
+            "doi": "",
+        }
+
+    # batch prefixes: "delta" (batch-only) and one shared word, so each
+    # batch record meets every corpus record; corpus prefixes are their
+    # three record-unique words, which meet nothing
+    rows = [rec(b, "alpha beta gamma delta") for b in batch_ids]
+    for i in range(40):
+        uniq = [f"{w}{letters[i % 26]}{letters[i // 26]}" for w in "xyz"]
+        rows.append(rec(f"C{i:03d}", " ".join([*uniq, "alpha beta gamma"])))
+    prepared = prep(spark.createDataFrame(pd.DataFrame(rows))).persist()
+    batch = prepared.filter(F.col("ID").startswith("B"))
+    corpus = prepared.filter(F.col("ID").startswith("C"))
+    corpus_keys = corpus_key_table(corpus)
+
+    def pairset(df):
+        return {
+            (r["ID_1"], r["ID_2"], r["block_rule"])
+            for r in df.select("ID_1", "ID_2", "block_rule").collect()
+        }
+
+    considered, outcome = [], []
+    orig_tables = block_mod._word_prefix_tables
+    orig_cross = block_mod._refined_crossing_pairs
+
+    def tables_spy(*a, **k):
+        considered.append(True)
+        return orig_tables(*a, **k)
+
+    def cross_spy(*a, **k):
+        res = orig_cross(*a, **k)
+        outcome.append(res is not None)
+        return res
+
+    monkeypatch.setattr(block_mod, "_word_prefix_tables", tables_spy)
+    monkeypatch.setattr(block_mod, "_refined_crossing_pairs", cross_spy)
+    routed = pairset(
+        block_delta(
+            batch, corpus_keys, corpus,
+            max_block_size=5, hot_key_strategy="salt",
+            crossing_refine_min_pairs=0,
+        )
+    )
+    assert considered, "the hot crossing key was never a refine candidate"
+    assert outcome == [False], "dense key was routed to the word join"
+    fanout = pairset(
+        block_delta(
+            batch, corpus_keys, corpus,
+            max_block_size=5, hot_key_strategy="salt",
+            refine_hot_keys=False,
+        )
+    )
+    combined = block_fn(prepared, max_block_size=None)
+    want = {
+        (r["ID_1"], r["ID_2"], r["block_rule"])
+        for r in combined.select("ID_1", "ID_2", "block_rule").collect()
+        if r["ID_1"] in batch_ids or r["ID_2"] in batch_ids
+    }
+    prepared.unpersist()
+    assert routed == fanout == want
+    assert len(want) >= 8 * 40, "batch×corpus pairs missing"
