@@ -428,10 +428,10 @@ def test_crossing_estimate_blind_batch_side_routes_to_fanout(
     spark, monkeypatch
 ):
     """The crossing router estimates from a 1/16 record sample. A key
-    whose 8 batch members are all outside the sample used to read its
-    batch→corpus emission as 0 and go to the word join although every
-    batch title shares a word with every corpus title. Such a key is now
-    estimated from all its records, so it stays on the fan-out join; the
+    whose 8 batch members are all outside the sample would read its
+    batch→corpus emission as 0 from the sample, although every batch
+    title shares a word with every corpus title. Such a key must be
+    estimated from all its records and stay on the fan-out join; the
     pair set is the same either way."""
     import pandas as pd
     from pyspark.sql import functions as F
