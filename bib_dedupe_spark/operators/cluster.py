@@ -7,26 +7,27 @@ the component being built is rejected — left unvisited — and later
 anchors a new component that absorbs its not-yet-visited neighbors.
 Components are identified by their minimum member ID.
 
-``cluster()`` takes one of two exact paths, chosen by ONE aggregate job
-over the labeled edges that returns both the edge count and whether any
-edge carries a non-empty search_set:
+Every caller (``cluster()``, the harness CC queries, the maybe-case
+export) goes through ``connected_components``'s size gate: ONE aggregate
+job over the edges returns the edge count and whether any edge carries a
+non-empty search_set, and picks one of two exact paths:
 
-- **single task** (edge count ≤ ``SINGLE_TASK_MAX_EDGES`` and ≤
-  ``max_conflicted_edges``): every edge goes to one ``applyInPandas``
-  group running ``_constrained_split_pdf``, the reference DFS over edges
-  in canonical ``(src, dst)``-sorted order. Filtering that sorted list
-  to one component keeps the relative order of its nodes' first
-  appearances and components never touch, so one DFS over the whole
-  graph equals CC followed by per-component DFS — with no CC rounds, no
-  conflict detection and no checkpoint files.
+- **single task** (edge count ≤ ``single_task_max_edges``): every edge
+  goes to one ``applyInPandas`` group running ``_constrained_split_pdf``,
+  the reference DFS over edges in canonical ``(src, dst)``-sorted order
+  (plain CC when no set is given). Filtering that sorted list to one
+  component keeps the relative order of its nodes' first appearances and
+  components never touch, so one DFS over the whole graph equals CC
+  followed by per-component DFS — with no CC rounds, no conflict
+  detection and no checkpoint files.
 - **distributed** (larger graphs): the large-star/small-star algorithm
   (Kiveris et al., "Connected Components in MapReduce and Beyond") as an
   iterative DataFrame job, O(log² n) rounds, each a pair of groupBy
   shuffles with per-round ``localCheckpoint`` (or persisted parquet
   checkpoints for resumability) to truncate lineage. When the gate saw a
-  search_set, the components holding two members of one set (rare:
-  direct same-set pairs were pruned at blocking, block.py:127-149) are
-  re-split by the same DFS, each as one ``applyInPandas`` group.
+  search_set, ``cluster()`` re-splits the components holding two members
+  of one set (rare: direct same-set pairs were pruned at blocking,
+  block.py:127-149) by the same DFS, each as one ``applyInPandas`` group.
 
 Parity claim: output is identical to the reference when the reference
 receives its matched pairs sorted by (ID_1, ID_2); for other row orders
@@ -85,65 +86,40 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relink.unionByName(self_link).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    checkpoint_dir: str | None = None,
+def _star_components(
+    edges: DataFrame, max_iterations: int, checkpoint_dir: str | None
 ) -> DataFrame:
-    """Edge list (src, dst) → DataFrame[ID, component] (min-id labeling).
-
-    ``checkpoint_dir`` switches per-iteration lineage truncation from
-    localCheckpoint to resumable parquet checkpoints (see lineage.py).
-    """
-    spark = edges.sparkSession
-    current = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    current = current.localCheckpoint()
+    """Distributed CC over loop-free (src, dst) edges; see module docstring."""
+    current = edges.select("src", "dst").localCheckpoint()
 
     for iteration in range(max_iterations):
         # converged when large-star adds nothing new: after a small-star
         # pass the graph is an out-degree≤1 forest, where this implies the
-        # star fixpoint (any chain still produces a new shortcut edge).
-        # The novelty flag is computed INSIDE the same job that
-        # materializes the checkpoint (left join against the previous
-        # edge set), so the convergence check is a scan of the
-        # checkpointed partitions instead of a second join pass over
-        # grown per iteration.
+        # star fixpoint. The novelty flag (left join against the previous
+        # edges) is computed in the job that materializes the checkpoint,
+        # so the convergence check only scans the checkpointed partitions.
         if iteration > 0:
-            flagged = (
-                _large_star(current)
-                .join(
-                    current.withColumn("_old", F.lit(1)),
-                    ["src", "dst"],
-                    "left",
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                flagged.filter(F.col("_old").isNull()).limit(1).count()
-            )
-            if changed == 0:
+            flagged = _large_star(current).join(
+                current.withColumn("_old", F.lit(1)), ["src", "dst"], "left"
+            ).localCheckpoint()
+            if flagged.filter(F.col("_old").isNull()).limit(1).count() == 0:
                 break
             grown = flagged.drop("_old")
         else:
-            # iteration 0: grown has exactly ONE consumer (the small-star
-            # below) and no convergence check reads it — skip the
-            # checkpoint job; the small-star checkpoint materializes the
-            # two-star chain in one pass with lineage depth 2
+            # iteration 0: grown's one consumer is the small-star below,
+            # whose checkpoint materializes both stars in one job
             grown = _large_star(current)
         current = _small_star(grown)
         if checkpoint_dir is not None:
             path = f"{checkpoint_dir}/cc_iter_{iteration}"
             current.write.mode("overwrite").parquet(path)
-            current = spark.read.parquet(path)
+            current = edges.sparkSession.read.parquet(path)
         else:
             current = current.localCheckpoint()
 
-    membership = _symmetrize(current).groupBy("src").agg(
-        F.min("dst").alias("root")
-    )
-    return membership.select(
-        F.col("src").alias(C.ID),
-        F.least(F.col("src"), F.col("root")).alias(C.COMPONENT),
+    root = _symmetrize(current).groupBy("src").agg(F.min("dst").alias("root"))
+    return root.select(
+        F.col("src").alias(C.ID), F.least("src", "root").alias(C.COMPONENT)
     )
 
 
@@ -153,18 +129,9 @@ def connected_components(
 MAX_CONFLICTED_COMPONENT_EDGES = 5_000_000
 
 # graphs with at most this many edges skip distributed CC and run the DFS
-# over ALL edges in one task (see module docstring). Measured with
-# scripts/cluster_crossover.py (local[2], 2 GB driver heap, duplicate-
-# cluster graphs without search sets, 3 interleaved repeats in fresh
-# JVMs, load 2.2-2.7, kernel gauge 33-52 ms), median cluster() wall:
-#
-#     edges       single task    distributed CC (jobs)
-#     10,000        1.2 s          6.0 s (33)
-#     100,000       2.6 s         12.5 s (36)
-#     300,000       6.0 s         21.4 s (35)
-#     1,000,000    15.1 s         40.4 s (31)
-#
-# The single task won every pair; the crossover lies above 1M edges. The
+# over ALL edges in one task (see module docstring). In
+# scripts/cluster_crossover.py the single task won every size measured,
+# 10k to 1M edges (table and conditions: IMPLEMENTATION.md §2.10); the
 # bound stays at the largest size measured, so one task never holds a
 # graph larger than one shown to win.
 SINGLE_TASK_MAX_EDGES = 1_000_000
@@ -192,8 +159,8 @@ def _constrained_split_pdf(
             "the limit"
         )
     pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-    adj: dict[str, list[str]] = {}
-    eset: dict[str, str] = {}
+    adj: dict = {}
+    eset: dict = {}
     for src, dst, s1, s2 in zip(
         pdf["src"], pdf["dst"], pdf["sset_src"], pdf["sset_dst"]
     ):
@@ -205,13 +172,13 @@ def _constrained_split_pdf(
         eset[src] = s1 if isinstance(s1, str) else ""
         eset[dst] = s2 if isinstance(s2, str) else ""
 
-    visited: set[str] = set()
-    out_ids: list[str] = []
-    out_comp: list[str] = []
+    visited: set = set()
+    out_ids: list = []
+    out_comp: list = []
     for start in adj:  # insertion order = first appearance in edge order
         if start in visited:
             continue
-        component: list[str] = []
+        component: list = []
         comp_sets: set[str] = set()
         stack = [start]
         while stack:
@@ -235,6 +202,55 @@ def _constrained_split_pdf(
     return pd.DataFrame({C.ID: out_ids, C.COMPONENT: out_comp})
 
 
+def _gated_components(
+    edges: DataFrame,
+    max_edges: int,
+    max_iterations: int = 50,
+    checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, bool]:
+    """The size gate over loop-free (src, dst, sset_src, sset_dst) edges →
+    (components, True when distributed CC ran on a graph with search sets,
+    which it ignores; the single task honours them)."""
+    has_set = (F.col("sset_src") != "") | (F.col("sset_dst") != "")
+    n, any_set = edges.agg(F.count(F.lit(1)), F.max(has_set)).first()
+    if n > max_edges:
+        cc = _star_components(edges, max_iterations, checkpoint_dir)
+        return cc, bool(any_set)
+    # one group holding every edge (a string key: an integer literal in
+    # groupBy reads as a column ordinal), output in the input's ID type —
+    # int64 IDs labeled as strings would take "10" < "9" minima
+    id_type = edges.schema["src"].dataType.simpleString()
+    single = edges.groupBy(F.lit("all")).applyInPandas(
+        lambda pdf: _constrained_split_pdf(pdf, max_edges),
+        schema=f"{C.ID} {id_type}, {C.COMPONENT} {id_type}",
+    )
+    return single, False
+
+
+def connected_components(
+    edges: DataFrame,
+    max_iterations: int = 50,
+    checkpoint_dir: str | None = None,
+    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
+) -> DataFrame:
+    """Edge list (src, dst) → DataFrame[ID, component] (min-id labeling),
+    IDs of the ``src`` column's type; self-loops are dropped.
+
+    One aggregate job sizes the graph: at most ``single_task_max_edges``
+    edges run the DFS in one task, larger graphs the distributed CC
+    (``single_task_max_edges=0`` forces it). ``checkpoint_dir`` switches
+    the distributed per-iteration lineage truncation from localCheckpoint
+    to resumable parquet checkpoints (see lineage.py).
+    """
+    no_set = F.lit("").alias
+    edges = edges.filter(F.col("src") != F.col("dst")).select(
+        "src", "dst", no_set("sset_src"), no_set("sset_dst")
+    )
+    return _gated_components(
+        edges, single_task_max_edges, max_iterations, checkpoint_dir
+    )[0]
+
+
 def cluster(
     matched_df: DataFrame,
     label: str = C.DUPLICATE,
@@ -248,10 +264,8 @@ def cluster(
     Only edges carrying ``label`` participate (cluster.py:98). Components
     are identified by their minimum member ID. The same-search_set
     constraint follows the reference DFS exactly (see module docstring).
-    Graphs of at most ``min(single_task_max_edges, max_conflicted_edges)``
-    edges run the DFS in one task; larger ones run distributed CC plus
-    DFS resolution of the (rare) conflicted components only.
-    ``single_task_max_edges=0`` forces the distributed path.
+    The size gate is ``connected_components``'s (its single task capped at
+    ``max_conflicted_edges``); this adds the search-set re-split only.
     """
     if enforce_search_sets:
         sset_1 = F.coalesce(F.col("search_set_1"), F.lit(""))
@@ -268,28 +282,12 @@ def cluster(
             sset_2.alias("sset_dst"),
         )
     )
-
-    # the one path-choosing action: graph size, and whether any search_set
-    # is present for the constraint to bind on
-    gate = edges_full.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max((F.col("sset_src") != "") | (F.col("sset_dst") != "")).alias(
-            "any_set"
-        ),
-    ).first()
-
-    if gate["n"] <= min(single_task_max_edges, max_conflicted_edges):
-        # one group holding every edge; the key is a string because an
-        # integer literal in groupBy is read as a column ordinal
-        return edges_full.groupBy(F.lit("all")).applyInPandas(
-            lambda pdf: _constrained_split_pdf(pdf, max_conflicted_edges),
-            schema=f"{C.ID} string, {C.COMPONENT} string",
-        )
-
-    components = connected_components(
-        edges_full.select("src", "dst"), checkpoint_dir=checkpoint_dir
+    components, unresolved = _gated_components(
+        edges_full,
+        min(single_task_max_edges, max_conflicted_edges),
+        checkpoint_dir=checkpoint_dir,
     )
-    if not gate["any_set"]:
+    if not unresolved:
         return components
 
     # per-node search_set from the edge endpoints (cluster.py:102-106)
@@ -304,10 +302,10 @@ def cluster(
         .agg(F.max("sset").alias("sset"))
     )
 
-    labeled = components.join(sets_df, C.ID, "left").fillna({"sset": ""})
     # components where the constraint actually binds: >1 member of one set
     conflicted = (
-        labeled.filter(F.col("sset") != "")
+        components.join(sets_df, C.ID)
+        .filter(F.col("sset") != "")
         .groupBy(C.COMPONENT, "sset")
         .count()
         .filter(F.col("count") > 1)
@@ -317,7 +315,9 @@ def cluster(
     )
 
     # the common case is NO conflict at all (direct same-set pairs were
-    # pruned at blocking): skip the anti-join + DFS plan entirely then
+    # pruned at blocking): skip the anti-join + DFS plan entirely then.
+    # Planning that arm unconditionally instead of this job was measured
+    # slower (2 more AQE jobs and +10% wall on a 50k-edge set graph).
     if conflicted.limit(1).count() == 0:
         conflicted.unpersist()
         return components
@@ -327,11 +327,9 @@ def cluster(
         F.broadcast(conflicted), C.COMPONENT, "left_anti"
     ).select(C.ID, C.COMPONENT)
 
-    # conflicted components: ship each component's edges to one pandas
-    # group and run the reference DFS (conflicts are rare by construction
-    # — direct same-set pairs were pruned at blocking — so this arm sees
-    # a tiny fraction of the graph; a pathologically giant conflicted
-    # component is a data-quality signal either way)
+    # conflicted components: each one's edges go to one pandas group for
+    # the reference DFS (conflicts are rare, so this arm sees a tiny
+    # fraction of the graph; a giant one is a data-quality signal)
     comp_of_src = components.select(
         F.col(C.ID).alias("src"), F.col(C.COMPONENT).alias("_comp")
     )

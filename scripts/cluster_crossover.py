@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
-"""Crossover of cluster()'s two paths: single-task DFS vs distributed CC.
+"""Crossover of connected_components' two paths: single-task DFS vs
+distributed CC, the bound behind ``SINGLE_TASK_MAX_EDGES``.
 
 Times ``cluster()`` on synthetic labeled edge lists of several sizes,
 once with every edge in one DFS task (``single_task_max_edges`` above the
 size) and once forced onto distributed connected components
-(``single_task_max_edges=0``). The edges form disjoint duplicate clusters
+(``single_task_max_edges=0``); cluster() passes the bound through to
+``connected_components``' size gate. The edges form disjoint duplicate clusters
 of 2-5 records, the shape dedupe produces and the one on which CC needs
 the fewest rounds; search sets are empty, so the distributed path skips
 conflict detection. Both choices favor the distributed path, so the

@@ -27,8 +27,9 @@ def build(out_path: str) -> str:
                 continue
             for name in files:
                 # package data (the bundled journal-variants starter
-                # table) must ship alongside the code
-                if not (name.endswith(".py") or name.endswith(".csv")):
+                # table, the canonical journal list) must ship alongside
+                # the code
+                if not name.endswith((".py", ".csv", ".txt")):
                     continue
                 full = os.path.join(root, name)
                 zf.write(full, os.path.relpath(full, REPO))

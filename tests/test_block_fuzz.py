@@ -15,11 +15,15 @@ conflicts — and asserts the three physical paths produce IDENTICAL
   * refined     (refine_hot_keys=True, refine_min_quad=0 so the router
                  considers every hot key regardless of the volume floor)
 
-All 200 corpora run in ONE DataFrame per mode: each corpus's author and
-title words carry a per-corpus tag, so blocking keys stay disjoint
-across corpora and one Spark action covers all seeds. The comparison
-is over the union, so even if prep collapsed two corpora's keys the
-differential would still be exact.
+All 200 corpora run in ONE DataFrame per mode, so one Spark action
+covers all seeds. Title words keep their per-corpus tag through prep,
+but the author and journal tags do not: author normalization strips
+digits (functions/authors.py, ``_RE_DIGITS``), so every corpus's
+``Fuzz{ci}, Anna`` prepares to the author ``fuzz``, and every
+``journal of c{ci} studies`` to the container_title ``j c stud``. The
+author+year and author+container keys are therefore shared by all
+corpora and form groups hundreds of records wide, a wanted hot-key
+case. The comparison is over the union, so it is exact either way.
 """
 import random
 
@@ -58,8 +62,8 @@ def _corpus(ci: int, rng: random.Random) -> list:
             {
                 "ID": f"{tag}r{i:03d}",
                 "ENTRYTYPE": "article",
-                # one author per corpus: the author+container and
-                # author+year groups go hot at tiny max_block_size
+                # prepares to "fuzz" in every corpus (module docstring):
+                # author+container and author+year groups go hot
                 "author": f"Fuzz{ci}, Anna",
                 "title": " ".join(words),
                 "journal": f"journal of {tag} studies",

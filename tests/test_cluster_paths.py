@@ -1,25 +1,45 @@
-"""cluster()'s two paths — one DFS task for small graphs, distributed CC
-for large ones — on the edge cases where they could drift apart, plus the
+"""The two paths of connected_components' size gate — one DFS task for
+small graphs, distributed CC for large ones — on the edge cases where they
+could drift apart, through connected_components() and cluster(), plus the
 small path's Spark job budget."""
+from pathlib import Path
+
 import pandas as pd
+import pytest
 
-from bib_dedupe_spark.operators.cluster import SINGLE_TASK_MAX_EDGES, cluster
+from bib_dedupe_spark import harness
+from bib_dedupe_spark.operators.cluster import (
+    SINGLE_TASK_MAX_EDGES,
+    cluster,
+    connected_components,
+)
+from tests.test_oracle_parity import SF_DIR
 
 
-def cluster_both_paths(matched, **kwargs):
-    """cluster() rows as a set of (ID, component), after checking that
+def _both_paths(run, frame, **kwargs):
+    """run(frame) rows as a set of (ID, component), after checking that
     forced distributed CC and the single DFS task return identical rows."""
     distributed, single = (
         {
             tuple(r)
-            for r in cluster(
-                matched, single_task_max_edges=bound, **kwargs
+            for r in run(
+                frame, single_task_max_edges=bound, **kwargs
             ).collect()
         }
         for bound in (0, SINGLE_TASK_MAX_EDGES)
     )
     assert distributed == single
     return single
+
+
+def cluster_both_paths(matched, **kwargs):
+    """cluster() rows, identical on both paths."""
+    return _both_paths(cluster, matched, **kwargs)
+
+
+def cc_both_paths(edges):
+    """connected_components() rows, identical on both paths."""
+    return _both_paths(connected_components, edges)
 
 
 def _matched(spark, rows):
@@ -107,3 +127,44 @@ def test_small_path_job_budget(spark):
         m.unpersist()
     assert len(rows) == 5
     assert jobs <= SMALL_PATH_JOB_BUDGET
+
+
+def test_int64_ids_keep_their_type_and_numeric_minima(spark):
+    # string order differs from numeric order: "10" < "100" < "9", "20" < "3"
+    edges = spark.createDataFrame(
+        [(100, 10), (10, 9), (20, 3)], "src long, dst long"
+    )
+    for bound in (0, SINGLE_TASK_MAX_EDGES):
+        out = connected_components(edges, single_task_max_edges=bound)
+        assert dict(out.dtypes) == {"ID": "bigint", "component": "bigint"}
+    assert cc_both_paths(edges) == {
+        (9, 9),
+        (10, 9),
+        (100, 9),
+        (3, 3),
+        (20, 3),
+    }
+
+
+# measured on sf0.01 (local[4], 4 shuffle partitions): the gate's
+# aggregate and the single DFS task, each re-reading the blocked pairs,
+# took 7 jobs; the distributed CC it replaced took 23
+CC_QUERY_JOB_BUDGET = 10
+
+
+@pytest.mark.skipif(
+    not Path(SF_DIR).is_dir(), reason="sf0.01 test data not available"
+)
+def test_cluster_components_query_job_budget(spark):
+    sc = spark.sparkContext
+    group = "cluster-components-query-budget"
+    sc.setJobGroup(group, group)
+    try:
+        harness.QUERIES["cluster_components"](spark, SF_DIR).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= CC_QUERY_JOB_BUDGET

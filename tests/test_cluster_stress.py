@@ -1,11 +1,11 @@
 """Connected-components stress test: a larger random graph checked
-against a driver-side union-find oracle, through connected_components()
-and through both cluster() paths."""
+against a union-find oracle in plain Python, through both paths of
+connected_components() and of cluster()."""
 import random
 
 import pandas as pd
 
-from tests.test_cluster_paths import cluster_both_paths
+from tests.test_cluster_paths import cc_both_paths, cluster_both_paths
 
 
 def _union_find_components(edges):
@@ -55,13 +55,11 @@ def _as_sets(rows):
 
 
 def test_cc_matches_union_find_on_random_graph(spark):
-    from bib_dedupe_spark.operators.cluster import connected_components
-
     edges = _stress_edges()
     want = _union_find_components(edges)
 
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = _as_sets(tuple(r) for r in connected_components(df).collect())
+    got = _as_sets(cc_both_paths(df))
     got_sets = {frozenset(v) for v in got.values()}
     assert got_sets == want
     # min-ID labeling invariant

@@ -2,13 +2,13 @@
 
 Merge expectations mirror /root/reference/tests/merge_test.py:13-41;
 cluster tests pin the connected-components semantics (min-ID labeling,
-chains, search-set splitting) on both cluster() paths.
+chains, search-set splitting) on both paths of connected_components()
+and cluster().
 """
 from pyspark.sql import functions as F
 
-from bib_dedupe_spark.operators.cluster import connected_components
 from bib_dedupe_spark.operators.merge import merge
-from tests.test_cluster_paths import cluster_both_paths
+from tests.test_cluster_paths import cc_both_paths, cluster_both_paths
 
 
 def test_merge_survivorship(spark):
@@ -52,10 +52,7 @@ def test_connected_components_chain(spark):
         [("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("x1", "x2")],
         ["src", "dst"],
     )
-    got = {
-        r["ID"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
+    got = dict(cc_both_paths(edges))
     assert got == {
         "n1": "n1",
         "n2": "n1",

@@ -69,3 +69,22 @@ def test_query_matches_oracle(name, spark, ddb):
     assert _canon(got_rows, got_cols) == _canon(want_rows, want_cols), (
         f"{name}: value mismatch"
     )
+
+
+@pytest.mark.parametrize("name", ["cluster_components", "near_dup_clusters"])
+def test_distributed_cc_matches_oracle(name, spark, ddb, monkeypatch):
+    """These queries' graphs fit connected_components' single task, so the
+    case above checks only the DFS; forcing the distributed path keeps the
+    recursive-CTE oracle checking large-star/small-star too."""
+    from bib_dedupe_spark.operators import cluster as cl
+
+    single_or_distributed = cl.connected_components
+    calls = []
+
+    def distributed(edges, **kwargs):
+        calls.append(edges)
+        return single_or_distributed(edges, single_task_max_edges=0, **kwargs)
+
+    monkeypatch.setattr(cl, "connected_components", distributed)
+    test_query_matches_oracle(name, spark, ddb)
+    assert calls, f"{name} did not reach connected_components"
