@@ -26,10 +26,15 @@ keys, the same AllPairs generator (:func:`_refined_hot_pairs`) probed
 batch→corpus and corpus→batch.
 
 Skew handling: composite keys are explicit columns, so hot keys are
-observable; keys whose group exceeds ``max_block_size`` are dropped from
-pair generation (logged via the returned metrics accumulator) instead of
-producing O(k²) pairs — the reference simply eats that cost in one
-process. AQE skew-join splitting covers residual join skew.
+observable (:func:`blocking_key_stats`). By default
+(``hot_key_strategy="salt"``) a key whose group exceeds the salt bucket
+size is split over salt buckets, or for require-overlap rules routed to
+the refined word join; either way every pair is kept, and the O(k²) work
+is spread over many tasks instead of one — the reference simply eats that
+cost in one process. ``hot_key_strategy="drop"`` instead drops keys above
+``max_block_size`` from pair generation (bounded output, a recall risk;
+nothing records the dropped keys). AQE skew-join splitting covers
+residual join skew.
 
 The NaN quirk: the reference leaves ``author_first`` as NaN for empty
 authors (prep.py:241), and NaN passes its non-empty blocking filter, so

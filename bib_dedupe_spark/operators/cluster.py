@@ -321,6 +321,13 @@ def cluster(
     if conflicted.limit(1).count() == 0:
         conflicted.unpersist()
         return components
+    # the result is lazy, so the cache cannot outlive this call: the
+    # (rare) conflicted ids come back from it as a small local table
+    conflicted_ids = conflicted.collect()
+    conflicted.unpersist()
+    conflicted = matched_df.sparkSession.createDataFrame(
+        conflicted_ids, schema=conflicted.schema
+    )
 
     # fast path: untouched components pass through with no extra shuffle
     clean = components.join(

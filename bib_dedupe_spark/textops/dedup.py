@@ -3,10 +3,14 @@
 All-native Spark plans (no Python UDFs): hashing is md5-based so results
 are engine-portable and deterministic; every operator returns a DataFrame
 and composes with the record-linkage pipeline. Designed for the 100 TB
-path: shingling is an explode (map-side), minhash is a partial-aggregable
-groupBy, LSH candidates come from an equi-join on band signatures —
-shuffle keys are (band, signature), which salts naturally because the
-signature space is wide.
+path: shingling is an explode (map-side), MinHash and SimHash are each one
+partial-aggregable groupBy per document, and LSH candidates come from one
+groupBy on (band, signature) — a shuffle key that salts naturally because
+the signature space is wide.
+
+Words are the single-space split of the text (``split(text, ' ')``, the
+oracle SQL's ``string_split(text, ' ')``): a tab or newline stays inside
+its word, and a doubled, leading or trailing space yields an empty word.
 """
 from __future__ import annotations
 
@@ -36,65 +40,82 @@ def shingles(
     id_col: str = "doc_id",
     size: int = 3,
 ) -> DataFrame:
-    """Distinct word n-gram shingles per document (explode, no shuffle)."""
-    words = F.split(F.col(text_col), r"\s+")
+    """Distinct word n-gram shingles per document (explode, no shuffle).
+
+    Words split on single spaces (module docstring); documents with fewer
+    than ``size`` words have no shingles.
+    """
+    words = df.select(
+        F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("w")
+    ).filter(F.size("w") >= size)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (size - 1), F.lit(0))),
+        F.sequence(F.lit(1), F.size("w") - (size - 1)),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + off) for off in range(size)]
+            " ", *[F.element_at(F.col("w"), i + off) for off in range(size)]
         ),
     )
-    return df.filter(F.size(words) >= size).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(grams)).alias("shingle"),
+    return words.select(
+        "doc", F.explode(F.array_distinct(grams)).alias("shingle")
     )
 
 
 def minhash_signatures(
     shingled: DataFrame, n_hashes: int = 32
 ) -> DataFrame:
-    """Per-(doc, seed) minwise md5 hash — one partial-aggregable groupBy."""
-    seeded = shingled.select(
-        "doc",
-        F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed"),
-        "shingle",
+    """Per-doc minwise md5 hashes as columns ``mh0 … mh{n_hashes-1}``.
+
+    One partial-aggregable groupBy(doc) holding one min per seed: no
+    n_hashes× seed explode and no per-(doc, seed) shuffle.
+    """
+    return shingled.groupBy("doc").agg(
+        *[
+            F.min(F.md5(F.concat_ws("|", F.lit(str(s)), "shingle"))).alias(
+                f"mh{s}"
+            )
+            for s in range(n_hashes)
+        ]
     )
-    hashed = seeded.select(
-        "doc",
-        "seed",
-        F.md5(F.concat_ws("|", F.col("seed").cast("string"), "shingle")).alias(
-            "h"
-        ),
-    )
-    return hashed.groupBy("doc", "seed").agg(F.min("h").alias("minhash"))
 
 
 def lsh_candidates(
     signatures: DataFrame, n_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
-    """Banded LSH: docs sharing any band signature become candidates."""
-    rows_per_band = n_hashes // bands
-    banded = (
-        signatures.withColumn(
-            "band", F.floor(F.col("seed") / rows_per_band).cast("int")
-        )
-        .groupBy("doc", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"],
-                ),
-                "",
-            ).alias("sig")
-        )
+    """Banded LSH: docs sharing any band signature become candidates.
+
+    A band's signature concatenates its ``n_hashes // bands`` minhashes in
+    seed order. Pairs come from ONE groupBy(band, sig): each bucket's
+    sorted doc list expands to its ``id1 < id2`` pairs (posexplode +
+    slice), so the signature plan runs once instead of once per side of a
+    self-join; per-bucket output is bounded by the bucket size, as the
+    join's per-key output was.
+    """
+    rows = n_hashes // bands
+    mh = [f"mh{s}" for s in range(n_hashes)]
+    band_sigs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat(*mh[lo : lo + rows]).alias("sig"),
+            )
+            for b, lo in enumerate(range(0, n_hashes, rows))
+        ]
     )
-    left = banded.select(F.col("doc").alias("id1"), "band", "sig")
-    right = banded.select(F.col("doc").alias("id2"), "band", "sig")
+    banded = signatures.select(
+        "doc", F.explode(band_sigs).alias("bs")
+    ).select("doc", "bs.band", "bs.sig")
+    groups = (
+        banded.groupBy("band", "sig")
+        .agg(F.array_sort(F.collect_list("doc")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
     return (
-        left.join(right, ["band", "sig"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
+        groups.select(F.posexplode("ids").alias("_i", "id1"), "ids")
+        .select(
+            "id1",
+            F.explode(
+                F.slice("ids", F.col("_i") + 2, F.size("ids"))
+            ).alias("id2"),
+        )
         .distinct()
     )
 
@@ -154,56 +175,31 @@ def simhash(
     id_col: str = "doc_id",
     bits: int = 16,
 ) -> DataFrame:
-    """Per-document SimHash bit-string over distinct tokens (md5 planes)."""
+    """Per-document SimHash bit-string over distinct tokens (md5 planes).
+
+    Tokens split on single spaces (module docstring). A token's value is
+    the first 16 bits of its md5 (one md5 + conv per token); bit j of the
+    signature is 1 when more distinct tokens set bit j than clear it. The
+    ``bits`` per-bit sums are integer aggregates of one groupBy(doc) — one
+    shuffle, no per-bit row explode. Bits past 16 are always 0.
+    """
     toks = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.split(F.col(text_col), r"\s+"))).alias(
+        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias(
             "t"
         ),
     )
-    hexv = F.expr(
-        "(instr('0123456789abcdef', substring(md5(t),1,1)) - 1) * 4096"
-        " + (instr('0123456789abcdef', substring(md5(t),2,1)) - 1) * 256"
-        " + (instr('0123456789abcdef', substring(md5(t),3,1)) - 1) * 16"
-        " + (instr('0123456789abcdef', substring(md5(t),4,1)) - 1)"
+    hv = F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("int")
+    sums = toks.select("doc", hv.alias("hv")).groupBy("doc").agg(
+        *[
+            F.sum(
+                2 * F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) - 1
+            ).alias(f"s{j}")
+            for j in range(bits)
+        ]
     )
-    contribs = toks.select("doc", hexv.alias("hv")).select(
-        "doc",
-        F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
-        "hv",
-    ).select(
-        "doc",
-        "j",
-        (
-            2
-            * (
-                F.floor(F.col("hv") / F.pow(F.lit(2), F.col("j"))).cast(
-                    "long"
-                )
-                % 2
-            )
-            - 1
-        ).alias("contrib"),
-    )
-    sums = contribs.groupBy("doc", "j").agg(F.sum("contrib").alias("s"))
-    return sums.groupBy("doc").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "j",
-                            F.when(F.col("s") > 0, "1")
-                            .otherwise("0")
-                            .alias("b"),
-                        )
-                    )
-                ),
-                lambda s: s["b"],
-            ),
-            "",
-        ).alias("simhash")
-    )
+    bit = [F.when(F.col(f"s{j}") > 0, "1").otherwise("0") for j in range(bits)]
+    return sums.select("doc", F.concat(*bit).alias("simhash"))
 
 
 def simhash_near_duplicates(

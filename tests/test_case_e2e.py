@@ -36,6 +36,8 @@ _FIELDS = [
 
 
 def _load_cases() -> list:
+    if not reference_available():  # collected, then skipped by pytestmark
+        return []
     data = json.loads(
         (REFERENCE_ROOT / "tests" / "test_cases.json").read_text(encoding="utf-8")
     )

@@ -80,6 +80,29 @@ def test_search_sets_ignored_when_not_enforced(spark):
     }
 
 
+def _cached_rdd_ids(spark):
+    """Ids of the persisted RDDs that back DataFrame caches (distributed
+    CC's localCheckpoint RDDs are persisted too, but hold its output)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        k
+        for k in rdds.keySet().toArray()
+        if not rdds.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
+def test_distributed_conflict_path_releases_its_cache(spark):
+    # a and c share set S, so their component conflicts and is re-split
+    m = _matched(
+        spark,
+        [("a", "b", "S", "", "duplicate"), ("b", "c", "", "S", "duplicate")],
+    )
+    before = _cached_rdd_ids(spark)
+    rows = cluster(m, single_task_max_edges=0).collect()
+    assert len({r["component"] for r in rows}) == 2
+    assert _cached_rdd_ids(spark) <= before
+
+
 def test_no_labeled_edges(spark):
     m = _matched(spark, [("a", "b", "", "", "maybe")])
     assert cluster(m).collect() == []

@@ -88,3 +88,48 @@ def test_distributed_cc_matches_oracle(name, spark, ddb, monkeypatch):
     monkeypatch.setattr(cl, "connected_components", distributed)
     test_query_matches_oracle(name, spark, ddb)
     assert calls, f"{name} did not reach connected_components"
+
+
+# the textops operators each query must run itself, so that its oracle
+# checks the library rather than a private copy in the harness
+TEXTOPS_CALLS = {
+    "minhash_lsh_pairs": (
+        "dedup.shingles",
+        "dedup.minhash_signatures",
+        "dedup.lsh_candidates",
+    ),
+    "ngram_jaccard": ("dedup.shingles", "dedup.ngram_jaccard"),
+    "near_dup_clusters": ("dedup.shingles", "dedup.ngram_jaccard"),
+    "simhash": ("dedup.simhash",),
+    "embedding_topk": (
+        "similarity_search.brute_force_topk",
+        "similarity_search.cosine",
+    ),
+    "embedding_near_dup": ("similarity_search.cosine",),
+    "embedding_sign_lsh": ("similarity_search.sign_lsh_bucket",),
+}
+
+
+@pytest.mark.parametrize("name", sorted(TEXTOPS_CALLS))
+def test_query_runs_textops_operators(name, spark, ddb, monkeypatch):
+    from bib_dedupe_spark.textops import dedup, similarity_search
+
+    modules = {"dedup": dedup, "similarity_search": similarity_search}
+    reached = set()
+
+    def recording(qualname, fn):
+        def wrapper(*args, **kwargs):
+            reached.add(qualname)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for qualname in set().union(*TEXTOPS_CALLS.values()):
+        module, attr = qualname.split(".")
+        original = getattr(modules[module], attr)
+        monkeypatch.setattr(
+            modules[module], attr, recording(qualname, original)
+        )
+    test_query_matches_oracle(name, spark, ddb)
+    missing = set(TEXTOPS_CALLS[name]) - reached
+    assert not missing, f"{name} did not reach {sorted(missing)}"
