@@ -50,6 +50,8 @@ def dedupe(records_df: DataFrame, max_block_size: int | None = 1000) -> DataFram
     """
     prepared = prep(records_df)
     pairs = block(prepared, max_block_size=max_block_size)
-    matched = match(pairs).persist()  # feeds clustering + search-set maps
+    # feeds clustering + search-set maps; a checkpoint, not a persist(),
+    # so AQE can reuse exchanges over it (see block.candidate_pairs)
+    matched = match(pairs).localCheckpoint()
     components = cluster(matched)
     return merge(records_df, components)

@@ -75,10 +75,10 @@ class StageRunner:
             table = self.manifest[stage].get("bucket_table")
             if table:
                 # Prefer the registered table (keeps bucket metadata → no
-                # Exchange on downstream equi-joins). A restart from a
-                # different cwd/warehouse won't see the derby metastore, so
-                # fall back to the recorded filesystem location as plain
-                # parquet — data identical, only bucketing metadata lost.
+                # Exchange on downstream equi-joins). A restart in a new
+                # session's catalog does not know the table, so fall back
+                # to the recorded filesystem location as plain parquet —
+                # data identical, only bucketing metadata lost.
                 if self.spark.catalog.tableExists(table):
                     return self.spark.table(table)
                 loc = self.manifest[stage].get("bucket_location")
@@ -97,17 +97,14 @@ class StageRunner:
         if bucket_by is not None:
             from bib_dedupe_spark.sources.io import write_records_bucketed
 
+            # the table's files live at the stage path, so a re-run
+            # after a crash overwrites them whatever its catalog knows
             table = self._bucket_table(stage)
             write_records_bucketed(
-                df, table, buckets=buckets, bucket_col=bucket_by
+                df, table, buckets=buckets, bucket_col=bucket_by, path=path
             )
             out = self.spark.table(table)
-            loc_rows = (
-                self.spark.sql(f"DESCRIBE FORMATTED {table}")
-                .filter(F.col("col_name") == "Location")
-                .collect()
-            )
-            bucket_location = loc_rows[0]["data_type"] if loc_rows else None
+            bucket_location = path
         else:
             df.write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)

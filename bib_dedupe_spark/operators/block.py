@@ -215,13 +215,20 @@ def _oriented_cols() -> list:
 
 
 def _self_join(keys: DataFrame) -> DataFrame:
-    """Raw pairs (ID_1 < ID_2) of the plain (rule_idx, key) self-join."""
+    """Raw pairs (ID_1 < ID_2) of the plain (rule_idx, key) self-join.
+
+    ``rto`` is a function of ``rule_idx``, so it is re-derived after the
+    join instead of read from one side: both sides then read the same
+    key-row columns, and a shuffle below them is one exchange that the
+    other side reuses.
+    """
     return (
-        _sided(keys, "1", ("rule_idx", "rto", "key"))
+        _sided(keys, "1", ("rule_idx", "key"))
         .join(_sided(keys, "2", ("rule_idx", "key")), ["rule_idx", "key"])
         .filter(F.col("ID_1") < F.col("ID_2"))
         .select(
-            "ID_1", "ID_2", "rule_idx", "rto",
+            "ID_1", "ID_2", "rule_idx",
+            F.col("rule_idx").isin(sorted(_RTO_RULE_IDXS)).alias("rto"),
             *(f"{c}_{s}" for c in _CARRY for s in ("1", "2")),
         )
     )
@@ -453,6 +460,43 @@ SALT_BUCKET_SIZE = 512
 # loudly rather than silently OOM the driver.
 HOT_KEY_COLLECT_LIMIT = 100_000
 
+def _precheck_rows(
+    keys: DataFrame, base: DataFrame, salt_threshold: int | None, ids: bool
+) -> list:
+    """The path-choosing questions of :func:`candidate_pairs`, answered
+    by ONE aggregate and ONE bounded collect.
+
+    With ``salt_threshold`` set, the key rows' ``(rule_idx, key)`` groups
+    above it are the hot keys. With ``ids``, every titled record adds a
+    ``(-1, string(xxhash64(ID)))`` row, and a ``-1`` group of more than
+    one row is a surrogate-id collision or a repeated id. Both kinds of
+    row come back in one collect, bounded in the job that computes it:
+    ``limit(N+1)`` returning ≤ N rows means the driver holds ALL of
+    them.
+    """
+    parts, keep = [], []
+    if salt_threshold is not None:
+        parts.append(keys.select("rule_idx", "key"))
+        keep.append(
+            (F.col("rule_idx") >= 0) & (F.col("_block_n") > salt_threshold)
+        )
+    if ids:
+        parts.append(
+            base.select(
+                F.lit(-1).alias("rule_idx"),
+                F.xxhash64(C.ID).cast("string").alias("key"),
+            )
+        )
+        keep.append((F.col("rule_idx") < 0) & (F.col("_block_n") > 1))
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("rule_idx", "key")
+        .agg(F.count("*").alias("_block_n"))
+        .filter(reduce(lambda a, b: a | b, keep))
+        .limit(HOT_KEY_COLLECT_LIMIT + 1)
+        .collect()
+    )
+
 
 def candidate_pairs(
     records_df: DataFrame,
@@ -510,8 +554,20 @@ def candidate_pairs(
     differential tests and the block_refined_pairs oracle, which pin the
     word-join generator on small fixtures).
 
-    The exploded key table feeds several consumers; ``cache`` persists it
-    so the upstream prep UDF pass runs once.
+    The exploded key table feeds several consumers; ``cache`` stores it
+    with ``localCheckpoint()`` so the upstream prep UDF pass runs once.
+    A checkpoint rather than ``persist()``: AQE wraps every read of a
+    persisted frame in its own cache query stage, whose canonical form
+    keeps its stage id, so two exchanges over one cache never match —
+    over a checkpoint the cold self-join's two sides share one shuffle.
+    The trade-off: checkpoint blocks cannot be recomputed, so a lost
+    executor fails the job (as ``cluster()``'s per-round checkpoints
+    already accept). Nothing is registered in the CacheManager.
+
+    Before pair generation ONE aggregate (:func:`_precheck_rows`)
+    answers both path-choosing questions: which keys are hot, and
+    whether a surrogate id collides. A collision (or a repeated input
+    id) warns and rebuilds the key rows with string ids.
 
     ``cache_out`` — when given, the refined path's shared prefix-word
     table (whose two shuffles the routing cost estimate already forces)
@@ -524,76 +580,66 @@ def candidate_pairs(
     """
     base = records_df.filter(F.col(C.TITLE).isNotNull())
 
-    id_map = None
-    if surrogate_ids:
-        # 8-byte surrogate ids through the (dominant) pair shuffles: at
-        # web scale the record ID is a URL, and the raw pair stream would
-        # otherwise carry two of them per row. xxhash64 is deterministic;
-        # a collision would silently fuse two records, so its absence is
-        # CHECKED (one aggregation over records — trivial next to pairs)
-        # and the string path is used on the (astronomically rare) hit.
-        # count(*) stands in for countDistinct(ID): one distinct
-        # aggregate instead of two keeps the check plan Expand-free (a
-        # corpus with REPEATED id rows now also routes to the string-id
-        # path — purely a physical choice, both paths emit identical
-        # pairs, and duplicate ids are degenerate input either way).
-        id_map = base.select(C.ID, F.xxhash64(C.ID).alias("_nid"))
-        counts_row = id_map.agg(
-            F.count("*").alias("n_id"),
-            F.countDistinct("_nid").alias("n_nid"),
-        ).first()
-        if counts_row["n_id"] != counts_row["n_nid"]:
+    def key_rows(id_col):
+        keys = _key_rows(base, id_col)
+        return keys.localCheckpoint() if cache else keys
+
+    # 8-byte surrogate ids through the (dominant) pair shuffles: at web
+    # scale the record ID is a URL, and the raw pair stream would
+    # otherwise carry two of them per row. xxhash64 is deterministic; a
+    # collision would silently fuse two records, so its absence is
+    # CHECKED by the pre-check aggregate below and the string path is
+    # used on the (astronomically rare) hit. Repeated input ids also
+    # route to the string path — purely a physical choice, both paths
+    # emit identical pairs, and duplicate ids are degenerate input.
+    id_map = (
+        base.select(C.ID, F.xxhash64(C.ID).alias("_nid"))
+        if surrogate_ids
+        else None
+    )
+    keys = key_rows(F.xxhash64(C.ID) if surrogate_ids else F.col(C.ID))
+
+    # Two tiers: keys above max_block_size are DROPPED under "drop";
+    # everything above the (smaller) salt bucket size is routed to the
+    # salted join for task granularity — pair-set preserving.
+    salt_threshold = None
+    if max_block_size is not None:
+        if salt_bucket_size is None:
+            salt_bucket_size = min(max_block_size, SALT_BUCKET_SIZE)
+        salt_threshold = (
+            salt_bucket_size if hot_key_strategy == "salt" else max_block_size
+        )
+    # The hot table feeds BOTH the anti-join and the salt join. It is
+    # already constrained to broadcast size (each consumer broadcasts
+    # it), so it is materialized to the DRIVER and rebuilt as a local
+    # relation: no cache entry outlives this call — streaming calls
+    # block()/block_delta() per micro-batch. When no key is hot (the
+    # common case) the anti-join and salt machinery are skipped.
+    hot_pairs = None
+    hot_rows = []
+    if surrogate_ids or salt_threshold is not None:
+        rows = _precheck_rows(keys, base, salt_threshold, surrogate_ids)
+        hot_rows = [r for r in rows if r["rule_idx"] >= 0]
+        if len(hot_rows) < len(rows):
             import warnings
 
+            # rare path: the exact counts only for the message
+            n_id, n_nid = base.agg(
+                F.count("*"), F.countDistinct(F.xxhash64(C.ID))
+            ).first()
             warnings.warn(
                 "xxhash64 surrogate-id collision (or repeated input ids) "
-                f"detected ({counts_row['n_id']} rows -> "
-                f"{counts_row['n_nid']} hashes); falling back to string "
-                "ids for this blocking pass",
+                f"detected ({n_id} rows -> {n_nid} hashes); falling back "
+                "to string ids for this blocking pass",
                 UserWarning,
                 stacklevel=2,
             )
             id_map = None
-
-    keys = _key_rows(
-        base, F.xxhash64(C.ID) if id_map is not None else F.col(C.ID)
-    )
-    if cache:
-        from pyspark.storagelevel import StorageLevel
-
-        keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-
-    hot_pairs = None
-    hot_rows = []
-    if max_block_size is not None:
-        if salt_bucket_size is None:
-            salt_bucket_size = min(max_block_size, SALT_BUCKET_SIZE)
-        counts = keys.groupBy("rule_idx", "key").agg(
-            F.count("*").alias("_block_n")
-        )
-        # The hot table feeds BOTH the anti-join and the salt join. It is
-        # already constrained to broadcast size (each consumer broadcasts
-        # it), so materialize it to the DRIVER once and rebuild it as a
-        # local relation: the aggregation runs a single time and no cache
-        # entry outlives this call — streaming calls block()/block_delta()
-        # per micro-batch, and a persist() here used to leak one cached
-        # frame per batch. When no key is hot (the common case) the anti-
-        # join and salt machinery are skipped entirely.
-        #
-        # Two tiers: keys above max_block_size are DROPPED under "drop";
-        # everything above the (smaller) salt bucket size is routed to
-        # the salted join for task granularity — pair-set preserving.
-        salt_threshold = (
-            salt_bucket_size if hot_key_strategy == "salt" else max_block_size
-        )
-        # limit(N+1) bounds the driver materialization in the same job
-        # that computes it: ≤ N rows back means we have ALL hot keys;
-        # N+1 means the hot set exceeds broadcast size — refuse.
-        hot_rows = (
-            counts.filter(F.col("_block_n") > salt_threshold)
-            .limit(HOT_KEY_COLLECT_LIMIT + 1)
-            .collect()
-        )
+            keys = key_rows(F.col(C.ID))
+            full = len(rows) > HOT_KEY_COLLECT_LIMIT
+            if full and salt_threshold is not None:
+                # id rows shared the bound: the hot set may be partial
+                hot_rows = _precheck_rows(keys, base, salt_threshold, False)
         if len(hot_rows) > HOT_KEY_COLLECT_LIMIT:
             raise ValueError(
                 f"more than {HOT_KEY_COLLECT_LIMIT} blocking keys exceed "
@@ -610,7 +656,7 @@ def candidate_pairs(
         def hot_keys(rows):
             return F.broadcast(
                 records_df.sparkSession.createDataFrame(
-                    rows, schema=counts.schema
+                    rows, schema="rule_idx int, key string, _block_n long"
                 )
             )
 
@@ -768,13 +814,15 @@ def candidate_pairs(
     if max_block_size is not None:
         # Cold-side self-join with ONE shuffle of the key table instead
         # of two, and singletons dropped before the join probe. The
-        # explicit repartition on the join key makes both join sides
-        # read the SAME exchange (ReusedExchange — the plain self-join
-        # could not reuse it because the sides project different
-        # columns below their exchanges); the window count's sort is by
-        # exactly the join keys, so it doubles as the sort-merge sort
-        # and drops singleton (rule, key) groups — the vast majority at
-        # web scale, which the plain join shuffled into BOTH sides and
+        # explicit repartition on the join key lets both join sides
+        # read the SAME exchange (ReusedExchange). That needs both sides
+        # to read the same columns below it (_self_join re-derives rto
+        # for that) and the key rows to be a checkpoint, not a persisted
+        # frame (see the docstring); over a persist() the plan ran two
+        # shuffles. The window count's sort is by exactly the join
+        # keys, so it doubles as the sort-merge sort and drops
+        # singleton (rule, key) groups — the vast majority at web
+        # scale, which the plain join shuffled into BOTH sides and
         # sorted just to produce nothing. Window partitions are bounded
         # by the hot threshold (hot keys were routed out above), so the
         # window buffers at most salt_threshold rows per group. Pair
@@ -899,9 +947,14 @@ def block(
 ) -> DataFrame:
     """Full blocking stage → enriched, pruned pair table.
 
-    ``cache`` persists the (filtered) prepared records: they feed the key
-    explode plus both enrichment joins — without it, an unpersisted prep
-    stage would re-run its normalizer UDF pass for every consumer.
+    ``cache`` stores the (filtered) prepared records with
+    ``localCheckpoint()``: they feed the key explode plus both enrichment
+    joins — without it, an unpersisted prep stage would re-run its
+    normalizer UDF pass for every consumer. As for the key rows in
+    :func:`candidate_pairs`, a checkpoint lets AQE reuse one broadcast
+    of the records (and of the surrogate id map) for both enrichment
+    joins, and leaves no CacheManager entry behind; a lost executor
+    fails the job, because checkpoint blocks cannot be recomputed.
     ``hot_key_strategy`` / ``surrogate_ids`` — see
     :func:`candidate_pairs`. Surrogate ids default ON here: the raw pair
     shuffle carries two 8-byte longs instead of two record-id strings
@@ -911,9 +964,7 @@ def block(
     """
     records_df = records_df.filter(F.col(C.TITLE).isNotNull())
     if cache:
-        from pyspark.storagelevel import StorageLevel
-
-        records_df = records_df.persist(StorageLevel.MEMORY_AND_DISK)
+        records_df = records_df.localCheckpoint()
 
     pairs = candidate_pairs(
         records_df,

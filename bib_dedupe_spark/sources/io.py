@@ -53,6 +53,7 @@ def write_records_bucketed(
     table: str,
     buckets: int = 64,
     bucket_col: str = "ID",
+    path: str | None = None,
 ) -> None:
     """Persist records hash-bucketed (and sorted) on ``bucket_col``.
 
@@ -60,10 +61,17 @@ def write_records_bucketed(
     merge-stage cluster join: two tables bucketed the same way join with
     NO shuffle exchange on the bucketed key — the 100 TB layout for a
     corpus that is linked repeatedly (e.g. per crawl increment).
+
+    ``path`` makes the table external, with its files there: a later
+    write overwrites them even from a session whose catalog does not
+    know the table. Without it the table is managed, in the warehouse,
+    and such a write fails with ``LOCATION_ALREADY_EXISTS``.
     """
+    writer = df.write.mode("overwrite")
+    if path is not None:
+        writer = writer.option("path", path)
     (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, bucket_col)
+        writer.bucketBy(buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
         .saveAsTable(table)

@@ -89,6 +89,12 @@ def lsh_candidates(
     self-join; per-bucket output is bounded by the bucket size, as the
     join's per-key output was.
     """
+    if n_hashes % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide n_hashes ({n_hashes}): the "
+            "leftover minhashes would form a short band that buckets far "
+            "more pairs than the others"
+        )
     rows = n_hashes // bands
     mh = [f"mh{s}" for s in range(n_hashes)]
     band_sigs = F.array(
@@ -177,23 +183,39 @@ def simhash(
 ) -> DataFrame:
     """Per-document SimHash bit-string over distinct tokens (md5 planes).
 
-    Tokens split on single spaces (module docstring). A token's value is
-    the first 16 bits of its md5 (one md5 + conv per token); bit j of the
-    signature is 1 when more distinct tokens set bit j than clear it. The
-    ``bits`` per-bit sums are integer aggregates of one groupBy(doc) — one
-    shuffle, no per-bit row explode. Bits past 16 are always 0.
+    Tokens split on single spaces (module docstring). Bit j of a token's
+    value is bit ``j % 16`` of md5 hex chars ``4·(j//16)+1 … +4`` (one md5
+    per token, one conv per 16 bits), so ``bits`` may be up to 128, and
+    the first 16 bits do not depend on ``bits``. Bit j of the signature
+    is 1 when more distinct tokens set bit j than clear it. The ``bits``
+    per-bit sums are integer aggregates of one groupBy(doc) — one
+    shuffle, no per-bit row explode.
     """
+    if not 0 < bits <= 128:
+        raise ValueError(f"bits must be in 1..128 (one md5), got {bits}")
     toks = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias(
             "t"
         ),
     )
-    hv = F.conv(F.substring(F.md5("t"), 1, 4), 16, 10).cast("int")
-    sums = toks.select("doc", hv.alias("hv")).groupBy("doc").agg(
+    words = range((bits + 15) // 16)
+    hv = toks.select("doc", F.md5("t").alias("_md5")).select(
+        "doc",
+        *[
+            F.conv(F.substring("_md5", 4 * w + 1, 4), 16, 10)
+            .cast("int")
+            .alias(f"hv{w}")
+            for w in words
+        ],
+    )
+    sums = hv.groupBy("doc").agg(
         *[
             F.sum(
-                2 * F.shiftright(F.col("hv"), j).bitwiseAND(F.lit(1)) - 1
+                2 * F.shiftright(F.col(f"hv{j // 16}"), j % 16).bitwiseAND(
+                    F.lit(1)
+                )
+                - 1
             ).alias(f"s{j}")
             for j in range(bits)
         ]

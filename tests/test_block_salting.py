@@ -8,8 +8,7 @@ from bib_dedupe_spark.operators.block import blocking_key_stats, candidate_pairs
 from bib_dedupe_spark.operators.prep import prep
 
 
-@pytest.fixture(scope="module")
-def skewed_prepared(spark):
+def _skewed_rows():
     # 40 records sharing one author_first+year key (hot), plus distinct tail
     rows = []
     for i in range(40):
@@ -44,7 +43,26 @@ def skewed_prepared(spark):
                 "doi": "",
             }
         )
-    return prep(spark.createDataFrame(pd.DataFrame(rows))).persist()
+    return rows
+
+
+@pytest.fixture(scope="module")
+def skewed_prepared(spark):
+    return prep(spark.createDataFrame(pd.DataFrame(_skewed_rows()))).persist()
+
+
+@pytest.fixture(scope="module")
+def repeated_id_prepared(spark):
+    """The skewed corpus plus two records that re-use existing IDs;
+    ``prep(validate=False)`` lets them through. Their titles repeat too:
+    a pair's prune verdict is taken from any one of its rows, so two
+    titles under one ID would make the pair set order-dependent."""
+    rows = _skewed_rows()
+    rows.append(dict(rows[0], year="2019", volume="99"))
+    rows.append(dict(rows[41]))
+    return prep(
+        spark.createDataFrame(pd.DataFrame(rows)), validate=False
+    ).persist()
 
 
 def _pair_set(df):
@@ -258,16 +276,82 @@ def test_surrogate_ids_equal_string_path(spark):
 def test_candidate_pairs_leaves_no_cache_behind(spark, skewed_prepared):
     """The hot-key table is driver-materialized, not persist()ed: streaming
     calls block()/block_delta() per micro-batch, and a lingering cached
-    frame per call accumulates forever (ADVICE r3). After a salted run
-    with cache=False, no NEW RDD may remain in the block manager."""
+    frame per call accumulates forever. After a salted run with
+    cache=False, no RDD created by the call may remain in the block
+    manager. (RDD ids, not a count: earlier tests' checkpoint RDDs may be
+    cleaned up meanwhile.)"""
     skewed_prepared.count()  # settle the fixture's own persist
     sc = spark.sparkContext
-    before = len(sc._jsc.sc().getRDDStorageInfo())
+    first_id = sc.parallelize([0]).id()  # ids are assigned in order
     candidate_pairs(
         skewed_prepared, max_block_size=10, cache=False
     ).count()
-    after = len(sc._jsc.sc().getRDDStorageInfo())
-    assert after == before
+    left = [
+        i.id() for i in sc._jsc.sc().getRDDStorageInfo() if i.id() > first_id
+    ]
+    assert left == []
+
+
+def _block_rows(df):
+    return sorted(
+        (r["ID_1"], r["ID_2"], r["block_rule"])
+        for r in df.select("ID_1", "ID_2", "block_rule").collect()
+    )
+
+
+def test_surrogate_ids_fall_back_on_repeated_ids(repeated_id_prepared):
+    """A repeated input id is caught by block's pre-check aggregate: the
+    surrogate path warns and gives the string-id path's pairs."""
+    from bib_dedupe_spark import block as block_fn
+
+    plain = _block_rows(block_fn(repeated_id_prepared, surrogate_ids=False))
+    with pytest.warns(UserWarning, match="surrogate-id collision"):
+        surr = _block_rows(block_fn(repeated_id_prepared, surrogate_ids=True))
+    assert surr == plain and plain
+
+
+def test_repeated_ids_sharing_the_collect_bound(
+    repeated_id_prepared, monkeypatch
+):
+    """Repeated-id rows and hot keys share one bounded collect. When the
+    id rows push it over the bound, the hot keys are collected again
+    from the string-id key rows instead of failing or losing keys (a
+    lost key would escape the drop and add pairs)."""
+    from bib_dedupe_spark.operators import block as block_mod
+
+    hot = (
+        blocking_key_stats(repeated_id_prepared)
+        .filter("group_size > 10")
+        .count()
+    )
+    assert hot >= 2
+    monkeypatch.setattr(block_mod, "HOT_KEY_COLLECT_LIMIT", hot)
+    precheck = block_mod._precheck_rows
+    asked_ids = []
+
+    def recording(keys, base, salt_threshold, ids):
+        asked_ids.append(ids)
+        return precheck(keys, base, salt_threshold, ids)
+
+    monkeypatch.setattr(block_mod, "_precheck_rows", recording)
+
+    def pairs(surrogate_ids):
+        return _pair_set(
+            candidate_pairs(
+                repeated_id_prepared,
+                max_block_size=10,
+                hot_key_strategy="drop",
+                surrogate_ids=surrogate_ids,
+            )
+        )
+
+    plain = pairs(False)
+    with pytest.warns(UserWarning, match="surrogate-id collision"):
+        surr = pairs(True)
+    assert asked_ids == [False, True, False]
+    # every pair of this corpus sits in a dropped hot group, so both are
+    # empty, and a hot key lost on the way would show as extra pairs
+    assert surr == plain
 
 
 def test_salt_bucket_size_decoupled(skewed_prepared):

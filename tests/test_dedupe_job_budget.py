@@ -1,0 +1,47 @@
+"""Job budget of one ``dedupe()`` call and the exchange reuse in
+``block()``'s plan."""
+import pandas as pd
+import pytest
+
+from bib_dedupe_spark import block, dedupe, prep
+from bib_dedupe_spark.sources.synthetic import generate
+
+# measured on this corpus (local[4], 4 shuffle partitions): prep's ID
+# check 3, block's two checkpoints 1 each and its pre-check collect 2,
+# the matched checkpoint 8, the cluster gate 2 and the final collect 5;
+# with persisted inputs and two pre-check actions it took 29
+DEDUPE_JOB_BUDGET = 22
+
+
+@pytest.fixture(scope="module")
+def records(spark):
+    rows, _ = generate(n_base=200, seed=31)
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
+def test_dedupe_job_budget(spark, records):
+    sc = spark.sparkContext
+    group = "dedupe-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        merged = dedupe(records).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(merged) < records.count()
+    assert jobs <= DEDUPE_JOB_BUDGET
+
+
+def test_block_reuses_the_key_row_exchange(records):
+    """Both sides of the cold self-join read one shuffle of the key rows:
+    the executed plan reuses the repartition exchange."""
+    pairs = block(prep(records))
+    assert pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    reused = [
+        line
+        for line in plan.splitlines()
+        if "ReusedExchange" in line and "REPARTITION_BY_COL" in line
+    ]
+    assert reused, plan

@@ -105,3 +105,76 @@ def test_pipeline_bucketed_prep_stage(spark, tmp_path):
     # the bucketed (big) side must carry its bucketing into the join: at
     # most the probe side exchanges
     assert "Bucketed: true" in plan or plan.count("Exchange") <= 1, plan
+
+
+_RESUME_SCRIPT = """
+import sys
+from bib_dedupe_spark.lineage import run_pipeline
+from bib_dedupe_spark.session import get_spark
+
+ckpt, warehouse, out = sys.argv[1:4]
+spark = get_spark(
+    master="local[2]",
+    extra_conf={
+        "spark.driver.memory": "1g",
+        "spark.sql.warehouse.dir": warehouse,
+    },
+)
+records = spark.read.parquet(ckpt + "/stages/records")
+merged = run_pipeline(spark, records, ckpt, bucket_records=True, buckets=8)
+merged.write.parquet(out)
+spark.stop()
+"""
+
+
+def test_pipeline_bucketed_prep_resumes_in_a_new_catalog(spark, tmp_path):
+    """A crash after the bucketed prep table is written but before its
+    manifest record: a re-run in a fresh session (new in-memory catalog,
+    same warehouse) rewrites the table and gives the same output."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pandas as pd
+
+    from bib_dedupe_spark.lineage import run_pipeline
+    from bib_dedupe_spark.sources.synthetic import generate
+
+    records, _ = generate(n_base=40, seed=17)
+    df = spark.createDataFrame(pd.DataFrame(records))
+    ckpt = str(tmp_path / "ck")
+    first = run_pipeline(spark, df, ckpt, bucket_records=True, buckets=8)
+    expected = sorted(tuple(r) for r in first.collect())
+
+    manifest_path = Path(ckpt) / "manifest.json"
+    manifest = json.loads(manifest_path.read_text())
+    manifest_path.write_text(json.dumps({"records": manifest["records"]}))
+
+    out = str(tmp_path / "resumed")
+    env = dict(os.environ)
+    repo = str(Path(__file__).resolve().parent.parent)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _RESUME_SCRIPT,
+            ckpt,
+            spark.conf.get("spark.sql.warehouse.dir"),
+            out,
+        ],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    resumed = spark.read.parquet(out).select(*first.columns)
+    assert sorted(tuple(r) for r in resumed.collect()) == expected
+    assert json.loads(manifest_path.read_text())["prep"]["status"] == (
+        "complete"
+    )

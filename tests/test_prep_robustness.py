@@ -65,3 +65,17 @@ def test_prep_stage_handles_adversarial_rows(spark):
     for r in out:
         for k, v in r.asDict().items():
             assert v is None or isinstance(v, str)
+
+
+def test_prep_rejects_repeated_ids(spark):
+    from bib_dedupe_spark import prep
+
+    rows = [
+        {"ID": i, "ENTRYTYPE": "article", "author": "A, B", "title": t,
+         "journal": "J", "year": "2020"}
+        for i, t in (("a", "one title"), ("b", "two title"), ("a", "three"))
+    ]
+    df = spark.createDataFrame(pd.DataFrame(rows))
+    with pytest.raises(ValueError, match="must be unique"):
+        prep(df)
+    assert prep(df, validate=False).count() == 3

@@ -64,6 +64,29 @@ def test_simhash_near_duplicates(docs):
     assert (1, 2) in pairs
 
 
+def test_simhash_wide_signatures(docs):
+    """Past 16 bits every position still carries token bits, and the
+    first 16 are the 16-bit signature."""
+    narrow = {r["doc"]: r["simhash"] for r in dedup.simhash(docs).collect()}
+    wide = {
+        r["doc"]: r["simhash"] for r in dedup.simhash(docs, bits=32).collect()
+    }
+    assert {d: s[:16] for d, s in wide.items()} == narrow
+    assert all(len(s) == 32 for s in wide.values())
+    upper = [{s[j] for s in wide.values()} for j in range(16, 32)]
+    assert any(len(v) == 2 for v in upper)
+    with pytest.raises(ValueError, match="bits"):
+        dedup.simhash(docs, bits=129)
+
+
+def test_lsh_bands_must_divide_hashes(docs):
+    sigs = dedup.minhash_signatures(dedup.shingles(docs), n_hashes=10)
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.lsh_candidates(sigs, n_hashes=10, bands=3)
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.minhash_near_duplicates(docs, n_hashes=10, bands=3)
+
+
 def test_brute_force_topk(spark):
     vecs = spark.createDataFrame(
         [
