@@ -51,7 +51,13 @@ def dedupe(records_df: DataFrame, max_block_size: int | None = 1000) -> DataFram
     prepared = prep(records_df)
     pairs = block(prepared, max_block_size=max_block_size)
     # feeds clustering + search-set maps; a checkpoint, not a persist(),
-    # so AQE can reuse exchanges over it (see block.candidate_pairs)
-    matched = match(pairs).localCheckpoint()
+    # so AQE can reuse exchanges over it (see block.candidate_pairs).
+    # Nothing reads match's stage-1 cache once the checkpoint holds it.
+    match_caches: list = []
+    try:
+        matched = match(pairs, cache_out=match_caches).localCheckpoint()
+    finally:
+        for cached in match_caches:
+            cached.unpersist()
     components = cluster(matched)
     return merge(records_df, components)

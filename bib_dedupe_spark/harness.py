@@ -19,20 +19,53 @@ from bib_dedupe_spark.textops import dedup, similarity_search
 STOPWORDS = ("the", "a", "of", "and", "in")
 
 
+# Declared schemas of the harness input tables (the types Spark infers
+# from their files). Reading with a declared schema skips the footer
+# sampling that schema inference runs as one Spark job per read.
+TABLE_SCHEMAS = {
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+        "n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+        "event_type STRING, value DOUBLE, props STRING"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, "
+        "o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+}
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return _table(spark, sf_dir, "documents")
 
 
 def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
+    return _table(spark, sf_dir, "orders")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _table(spark, sf_dir, "events")
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _table(spark, sf_dir, "embeddings")
 
 
 def _with_tok(docs: DataFrame) -> DataFrame:
@@ -131,7 +164,7 @@ def q_block_refined_pairs(spark, sf_dir):
     from bib_dedupe_spark import constants as C
     from bib_dedupe_spark.operators.block import candidate_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
+    docs = _docs(spark, sf_dir).filter(
         F.col("lang").isNotNull() & (F.col("lang") != "")
     )
     title = F.concat_ws(
@@ -754,7 +787,7 @@ def q_revenue_by_priority(spark, sf_dir):
     orders = _orders(spark, sf_dir).select(
         "o_orderkey", "o_orderpriority"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
         F.col("l_discount").cast("decimal(18,2)").alias("disc"),

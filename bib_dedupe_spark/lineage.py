@@ -107,7 +107,8 @@ class StageRunner:
             bucket_location = path
         else:
             df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
+            # the written frame's schema: inferring it is a footer job
+            out = self.spark.read.schema(df.schema).parquet(path)
 
         lineage = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))

@@ -113,7 +113,9 @@ def _star_components(
         if checkpoint_dir is not None:
             path = f"{checkpoint_dir}/cc_iter_{iteration}"
             current.write.mode("overwrite").parquet(path)
-            current = edges.sparkSession.read.parquet(path)
+            current = edges.sparkSession.read.schema(current.schema).parquet(
+                path
+            )
         else:
             current = current.localCheckpoint()
 

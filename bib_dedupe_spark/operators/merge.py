@@ -152,7 +152,12 @@ def merge(
     # reference applies merge functions to singleton duplicate_id_sets too
     # (merge.py:176,227-231: e.g. origin 'b; a' normalizes to 'a;b' even
     # for a one-member set), so size-1 components must not shortcut.
-    clustered_ids = components.select(C.ID, C.COMPONENT)
+    # Both filters are explicit so the left-join branch and the branch
+    # Catalyst turns into an inner join broadcast the same plan, and AQE
+    # reuses one broadcast (and the clustering under it) for both.
+    clustered_ids = components.select(C.ID, C.COMPONENT).filter(
+        F.col(C.ID).isNotNull() & F.col(C.COMPONENT).isNotNull()
+    )
 
     # AQE promotes this to a broadcast join when the cluster map is small
     tagged = df.join(clustered_ids, C.ID, "left")

@@ -160,10 +160,16 @@ def prep(records_df: DataFrame, validate: bool = True) -> DataFrame:
         raise ValueError(f"records are missing required fields: {missing}")
 
     if validate:
-        total, distinct = df.select(
-            F.count(C.ID), F.count_distinct(C.ID)
-        ).first()
-        if total != distinct:
+        # one shuffle; a null ID is missing, not repeated
+        repeated = (
+            df.filter(F.col(C.ID).isNotNull())
+            .groupBy(C.ID)
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(1)
+            .collect()
+        )
+        if repeated:
             raise ValueError("ID column in records_df must be unique.")
 
     for field in C.OPTIONAL_FIELDS:

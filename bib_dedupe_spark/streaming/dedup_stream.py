@@ -268,7 +268,9 @@ def link_batch(
         prepared_batch.write.mode("overwrite").parquet(
             f"{corpus_path}/_batch={batch_id}"
         )
-        sealed_batch = spark.read.parquet(f"{corpus_path}/_batch={batch_id}")
+        sealed_batch = spark.read.schema(prepared_batch.schema).parquet(
+            f"{corpus_path}/_batch={batch_id}"
+        )
 
         if corpus is not None:
             # delta blocking against the persisted key INDEX: candidate

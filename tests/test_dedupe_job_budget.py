@@ -1,5 +1,5 @@
-"""Job budget of one ``dedupe()`` call and the exchange reuse in
-``block()``'s plan."""
+"""Job budget of one ``dedupe()`` call, the exchange reuse in
+``block()``'s plan, and the caches a call leaves behind."""
 import pandas as pd
 import pytest
 
@@ -7,10 +7,12 @@ from bib_dedupe_spark import block, dedupe, prep
 from bib_dedupe_spark.sources.synthetic import generate
 
 # measured on this corpus (local[4], 4 shuffle partitions): prep's ID
-# check 3, block's two checkpoints 1 each and its pre-check collect 2,
-# the matched checkpoint 8, the cluster gate 2 and the final collect 5;
-# with persisted inputs and two pre-check actions it took 29
-DEDUPE_JOB_BUDGET = 22
+# check 2, block's two checkpoints 1 each and its pre-check collect 2,
+# the matched checkpoint 8, the cluster gate 2 and the final collect 4;
+# with persisted inputs and two pre-check actions it took 29, and 22
+# with a two-shuffle ID check and two broadcasts of the components in
+# merge
+DEDUPE_JOB_BUDGET = 20
 
 
 @pytest.fixture(scope="module")
@@ -45,3 +47,12 @@ def test_block_reuses_the_key_row_exchange(records):
         if "ReusedExchange" in line and "REPARTITION_BY_COL" in line
     ]
     assert reused, plan
+
+
+def test_dedupe_leaves_no_cache_behind(spark, records):
+    """Match's stage-1 cache is released once the matched checkpoint
+    holds its rows: repeated calls add no CacheManager entries."""
+    spark.catalog.clearCache()
+    for _ in range(2):
+        assert dedupe(records).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
