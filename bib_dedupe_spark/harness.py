@@ -201,7 +201,6 @@ def q_block_refined_pairs(spark, sf_dir):
         rec,
         max_block_size=32,
         hot_key_strategy="salt",
-        refine_hot_keys=True,
         refine_min_quad=0,  # force routing despite the tiny fixture
     )
     return pairs.select(

@@ -21,15 +21,18 @@ groupby/combinations):
     → two enrichment joins against the records (survivors only)
 
 Incremental blocking (:func:`block_delta`) uses the same key rows as its
-persisted corpus index, the same prune + aggregate step and, for hot
-keys, the same AllPairs generator (:func:`_refined_hot_pairs`) probed
-batch→corpus and corpus→batch.
+persisted corpus index, builds the batch's key rows once for every join,
+routes its within-batch pairs through the same hot-key router
+(:func:`_route_pairs`), runs one prune + aggregate step over within and
+crossing pairs and, for hot crossing keys, the same AllPairs generator
+(:func:`_refined_hot_pairs`) probed batch→corpus and corpus→batch.
 
 Skew handling: composite keys are explicit columns, so hot keys are
 observable (:func:`blocking_key_stats`). By default
 (``hot_key_strategy="salt"``) a key whose group exceeds the salt bucket
 size is split over salt buckets, or for require-overlap rules routed to
-the refined word join; either way every pair is kept, and the O(k²) work
+the refined word join above an all-pairs volume floor
+(``refine_min_quad``); either way every pair is kept, and the O(k²) work
 is spread over many tasks instead of one — the reference simply eats that
 cost in one process. ``hot_key_strategy="drop"`` instead drops keys above
 ``max_block_size`` from pair generation (bounded output, a recall risk;
@@ -43,6 +46,7 @@ this with a reserved sentinel for null ``author_first``.
 """
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
@@ -277,15 +281,15 @@ def _inline_prune_flags(df: DataFrame) -> DataFrame:
     )
 
 
-def _prune_aggregate(
-    raw_pairs: DataFrame, membership: DataFrame | None = None
-) -> DataFrame:
+def _prune_aggregate(raw_pairs: DataFrame, *memberships) -> DataFrame:
     """Raw pairs → pruned (ID_1, ID_2, rule_idx), one row per pair.
 
     Earliest rule wins the attribution; overlap is required only if
-    EVERY producing rule required it (block.py:272-276). ``membership``
-    (refined hot groups) restores attribution for pairs the word join
-    legitimately skipped (:func:`_recover_attribution`).
+    EVERY producing rule required it (block.py:272-276). The
+    ``memberships`` (refined hot groups' key rows; None entries skipped)
+    restore attribution for pairs the word join legitimately skipped
+    (:func:`_recover_attribution`). A membership row is a real key row,
+    so their union qualifies only pairs that really share the key.
     """
     grouped = (
         _inline_prune_flags(raw_pairs)
@@ -300,8 +304,11 @@ def _prune_aggregate(
         .filter(F.col("_title_ok") | ~F.col("require_title_overlap"))
         .select("ID_1", "ID_2", "rule_idx")
     )
-    if membership is not None:
-        grouped = _recover_attribution(grouped, membership)
+    memberships = [m for m in memberships if m is not None]
+    if memberships:
+        grouped = _recover_attribution(
+            grouped, reduce(DataFrame.unionByName, memberships)
+        )
     return grouped
 
 
@@ -463,16 +470,18 @@ HOT_KEY_COLLECT_LIMIT = 100_000
 def _precheck_rows(
     keys: DataFrame, base: DataFrame, salt_threshold: int | None, ids: bool
 ) -> list:
-    """The path-choosing questions of :func:`candidate_pairs`, answered
-    by ONE aggregate and ONE bounded collect.
+    """The path-choosing questions of the blocking paths, answered by
+    ONE aggregate and ONE bounded collect.
 
     With ``salt_threshold`` set, the key rows' ``(rule_idx, key)`` groups
-    above it are the hot keys. With ``ids``, every titled record adds a
-    ``(-1, string(xxhash64(ID)))`` row, and a ``-1`` group of more than
-    one row is a surrogate-id collision or a repeated id. Both kinds of
-    row come back in one collect, bounded in the job that computes it:
-    ``limit(N+1)`` returning ≤ N rows means the driver holds ALL of
-    them.
+    above it are the hot keys. With ``ids``, every titled record of
+    ``base`` adds a ``(-1, string(xxhash64(ID)))`` row, and a ``-1``
+    group of more than one row is a surrogate-id collision or a repeated
+    id. Both kinds of row come back in one collect, bounded in the job
+    that computes it: ``limit(N+1)`` returning ≤ N rows means the driver
+    holds ALL of them. On an ``orderBy`` the limit is a per-partition
+    top-N read in one job; a bare ``limit`` reads the partitions in
+    growing rounds, one job each, when fewer than N+1 rows qualify.
     """
     parts, keep = [], []
     if salt_threshold is not None:
@@ -493,121 +502,45 @@ def _precheck_rows(
         .groupBy("rule_idx", "key")
         .agg(F.count("*").alias("_block_n"))
         .filter(reduce(lambda a, b: a | b, keep))
+        .orderBy("rule_idx", "key")
         .limit(HOT_KEY_COLLECT_LIMIT + 1)
         .collect()
     )
 
 
-def candidate_pairs(
-    records_df: DataFrame,
-    max_block_size: int | None = 1000,
-    cache: bool = True,
-    hot_key_strategy: str = "salt",
-    surrogate_ids: bool = False,
-    salt_bucket_size: int | None = None,
-    refine_hot_keys: bool = True,
+def _route_pairs(
+    keys: DataFrame,
+    hot_rows: list,
+    max_block_size: int | None,
+    hot_key_strategy: str,
+    refine_min_quad: float | None = None,
     cache_out: list | None = None,
-    refine_min_quad: int | None = None,
-) -> DataFrame:
-    """Pruned candidate pairs (ID_1 < ID_2, rule_idx), first-rule
-    attribution.
-
-    The key rows (:func:`_key_rows`) carry each record's hashed
-    (title, tokens, search_set) payload, the search-set and
-    title-overlap prunes evaluate on the self-join output map-side, and
-    the returned table is already pruned — candidates never pay
-    post-aggregation record joins just to be discarded (at 155k records
-    that is 71M raw pairs pruned to ~1.5M).
-
-    Hot-key skew: a blocking key shared by k records implies O(k²) pairs.
-    With ``hot_key_strategy="salt"`` (default), keys whose group exceeds
-    the salt bucket size are split into ⌈k / bucket⌉ deterministic salt
-    buckets; within-bucket plus lower-triangular cross-bucket joins
-    regenerate EXACTLY the same pair set while bounding every join
-    group — the quadratic output is spread over many tasks instead of one
-    reducer. ``"drop"`` removes keys above ``max_block_size`` outright
-    (bounded-output mode; observable via :func:`blocking_key_stats`).
-
-    ``salt_bucket_size`` (default min(max_block_size, SALT_BUCKET_SIZE))
-    is the EXECUTION granularity, decoupled from the semantic
-    ``max_block_size``: a join cell emits up to bucket² rows, so leaving
-    the bucket at a 2000-record cap meant 4M-row cells and a straggler
-    task tail at 1M records (measured: 8 tasks dominating the block
-    stage). Salting is pair-set preserving, so a smaller bucket changes
-    only task shape — groups between the bucket size and
-    ``max_block_size`` route through the salted join too (in "drop" mode
-    only keys above ``max_block_size`` are dropped, exactly as before).
-
-    ``refine_hot_keys`` (default on; salt mode only): hot groups of
-    require-title-overlap rules skip the quadratic salted self-join
-    entirely and generate pairs through :func:`_refined_hot_pairs` —
-    wildcard×all plus a prefix-filtered word join whose output is a
-    superset of the downstream prune's survivors, so the FINAL pair set
-    (and, via the post-prune recovery join, first-rule attribution) is
-    bit-identical while the raw pair volume stops growing quadratically
-    at low-entropy keys. Non-overlap rules' hot groups still use the
-    salted join (their pairs are all legitimate output).
-    ``refine_min_quad`` overrides ``REFINE_MIN_QUAD_PAIRS``, the
-    AGGREGATE all-pairs-volume floor below which the whole hot rto set
-    is routed to the salted join without building the refinement subplan
-    at all (0 = always consider refinement — used by the refinement
-    differential tests and the block_refined_pairs oracle, which pin the
-    word-join generator on small fixtures).
-
-    The exploded key table feeds several consumers; ``cache`` stores it
-    with ``localCheckpoint()`` so the upstream prep UDF pass runs once.
-    A checkpoint rather than ``persist()``: AQE wraps every read of a
-    persisted frame in its own cache query stage, whose canonical form
-    keeps its stage id, so two exchanges over one cache never match —
-    over a checkpoint the cold self-join's two sides share one shuffle.
-    The trade-off: checkpoint blocks cannot be recomputed, so a lost
-    executor fails the job (as ``cluster()``'s per-round checkpoints
-    already accept). Nothing is registered in the CacheManager.
-
-    Before pair generation ONE aggregate (:func:`_precheck_rows`)
-    answers both path-choosing questions: which keys are hot, and
-    whether a surrogate id collides. A collision (or a repeated input
-    id) warns and rebuilds the key rows with string ids.
-
-    ``cache_out`` — when given, the refined path's shared prefix-word
-    table (whose two shuffles the routing cost estimate already forces)
-    is persisted and appended to the list; the CALLER unpersists after
-    consuming the returned pairs (match.py cache_out convention). When
-    ``None`` (default) nothing is persisted here — the prefix chain is
-    recomputed by the downstream action, trading one extra pass over the
-    hot-key words for a leak-free default (streaming calls this per
-    batch 0; a persist that outlives the call would accumulate).
+):
+    """``(raw_pairs, membership)`` of key rows: the one pair router of
+    :func:`candidate_pairs` and of :func:`block_delta`'s within-batch
+    pairs. ``hot_rows`` are the collected ``(rule_idx, key, _block_n)``
+    groups above the hot threshold (:func:`_precheck_rows`); with
+    ``max_block_size=None`` the plain self-join runs. ``membership`` is
+    the refined groups' key rows for :func:`_prune_aggregate`, or None.
     """
-    base = records_df.filter(F.col(C.TITLE).isNotNull())
-
-    def key_rows(id_col):
-        keys = _key_rows(base, id_col)
-        return keys.localCheckpoint() if cache else keys
-
-    # 8-byte surrogate ids through the (dominant) pair shuffles: at web
-    # scale the record ID is a URL, and the raw pair stream would
-    # otherwise carry two of them per row. xxhash64 is deterministic; a
-    # collision would silently fuse two records, so its absence is
-    # CHECKED by the pre-check aggregate below and the string path is
-    # used on the (astronomically rare) hit. Repeated input ids also
-    # route to the string path — purely a physical choice, both paths
-    # emit identical pairs, and duplicate ids are degenerate input.
-    id_map = (
-        base.select(C.ID, F.xxhash64(C.ID).alias("_nid"))
-        if surrogate_ids
-        else None
-    )
-    keys = key_rows(F.xxhash64(C.ID) if surrogate_ids else F.col(C.ID))
-
+    if max_block_size is None:
+        return _self_join(keys), None
+    salt = hot_key_strategy == "salt"
     # Two tiers: keys above max_block_size are DROPPED under "drop";
-    # everything above the (smaller) salt bucket size is routed to the
-    # salted join for task granularity — pair-set preserving.
-    salt_threshold = None
-    if max_block_size is not None:
-        if salt_bucket_size is None:
-            salt_bucket_size = min(max_block_size, SALT_BUCKET_SIZE)
-        salt_threshold = (
-            salt_bucket_size if hot_key_strategy == "salt" else max_block_size
+    # under "salt" everything above the (smaller) salt bucket size is
+    # routed to the salted join for task granularity — pair-set
+    # preserving. A join cell emits up to bucket² rows: a bucket at a
+    # 2000-record cap meant 4M-row cells and a straggler task tail at 1M
+    # records (measured: 8 tasks dominating the block stage).
+    salt_bucket_size = min(max_block_size, SALT_BUCKET_SIZE)
+    if len(hot_rows) > HOT_KEY_COLLECT_LIMIT:
+        threshold = salt_bucket_size if salt else max_block_size
+        raise ValueError(
+            f"more than {HOT_KEY_COLLECT_LIMIT} blocking keys exceed "
+            f"the hot-key threshold ({threshold}): the hot-key table no "
+            "longer fits a broadcast, which the salted join requires. "
+            "This corpus's key entropy is too low for salt mode — raise "
+            "max_block_size or use hot_key_strategy='drop'."
         )
     # The hot table feeds BOTH the anti-join and the salt join. It is
     # already constrained to broadcast size (each consumer broadcasts
@@ -615,47 +548,12 @@ def candidate_pairs(
     # relation: no cache entry outlives this call — streaming calls
     # block()/block_delta() per micro-batch. When no key is hot (the
     # common case) the anti-join and salt machinery are skipped.
-    hot_pairs = None
-    hot_rows = []
-    if surrogate_ids or salt_threshold is not None:
-        rows = _precheck_rows(keys, base, salt_threshold, surrogate_ids)
-        hot_rows = [r for r in rows if r["rule_idx"] >= 0]
-        if len(hot_rows) < len(rows):
-            import warnings
-
-            # rare path: the exact counts only for the message
-            n_id, n_nid = base.agg(
-                F.count("*"), F.countDistinct(F.xxhash64(C.ID))
-            ).first()
-            warnings.warn(
-                "xxhash64 surrogate-id collision (or repeated input ids) "
-                f"detected ({n_id} rows -> {n_nid} hashes); falling back "
-                "to string ids for this blocking pass",
-                UserWarning,
-                stacklevel=2,
-            )
-            id_map = None
-            keys = key_rows(F.col(C.ID))
-            full = len(rows) > HOT_KEY_COLLECT_LIMIT
-            if full and salt_threshold is not None:
-                # id rows shared the bound: the hot set may be partial
-                hot_rows = _precheck_rows(keys, base, salt_threshold, False)
-        if len(hot_rows) > HOT_KEY_COLLECT_LIMIT:
-            raise ValueError(
-                f"more than {HOT_KEY_COLLECT_LIMIT} blocking keys exceed "
-                f"the hot-key threshold ({salt_threshold}): the hot-key "
-                "table no longer fits a broadcast, which the salted join "
-                "requires. This corpus's key entropy is too low for salt "
-                "mode — raise salt_bucket_size/max_block_size, use "
-                "hot_key_strategy='drop', or leave refine_hot_keys on "
-                "so overlap-rule hot groups avoid the salted join."
-            )
-    refine_membership = None
+    hot_pairs = membership = None
     if hot_rows:
 
         def hot_keys(rows):
             return F.broadcast(
-                records_df.sparkSession.createDataFrame(
+                keys.sparkSession.createDataFrame(
                     rows, schema="rule_idx int, key string, _block_n long"
                 )
             )
@@ -665,36 +563,25 @@ def candidate_pairs(
             ["rule_idx", "key"],
             "left_anti",
         )
-        if hot_key_strategy == "salt":
-            ref_rows, salt_rows = [], list(hot_rows)
-            if refine_hot_keys:
-                # aggregate quadratic floor (REFINE_MIN_QUAD_PAIRS): the
-                # word-join chain's fixed plan cost amortizes over ALL
-                # candidate keys, so the go/no-go is on the SUM of their
-                # all-pairs volumes — below it the salted join is the
-                # cheaper exact plan for the whole set, and the entire
-                # refinement subplan (word/prefix tables, the
-                # routing-estimate collect, recovery joins) is skipped
-                # outright. Above it, the per-key est router still
-                # returns dense-vocabulary keys to salt individually.
-                min_quad = (
-                    REFINE_MIN_QUAD_PAIRS
-                    if refine_min_quad is None
-                    else refine_min_quad
-                )
-                cand = [
-                    r for r in hot_rows if r["rule_idx"] in _RTO_RULE_IDXS
-                ]
-                total_quad = sum(
-                    r["_block_n"] * (r["_block_n"] - 1) / 2 for r in cand
-                )
-                if total_quad >= min_quad:
-                    ref_rows = cand
-                    salt_rows = [
-                        r
-                        for r in hot_rows
-                        if r["rule_idx"] not in _RTO_RULE_IDXS
-                    ]
+        if salt:
+            # aggregate quadratic floor (REFINE_MIN_QUAD_PAIRS): the
+            # word-join chain's fixed plan cost amortizes over ALL
+            # candidate keys, so the go/no-go is on the SUM of their
+            # all-pairs volumes — below it the salted join is the cheaper
+            # exact plan for the whole set, and the entire refinement
+            # subplan (word/prefix tables, the routing-estimate collect,
+            # recovery joins) is skipped outright. Above it, the per-key
+            # est router still returns dense-vocabulary keys to salt
+            # individually.
+            if refine_min_quad is None:
+                refine_min_quad = REFINE_MIN_QUAD_PAIRS
+            ref_rows, salt_rows = [], []
+            for r in hot_rows:
+                rto = r["rule_idx"] in _RTO_RULE_IDXS
+                (ref_rows if rto else salt_rows).append(r)
+            ns = [r["_block_n"] for r in ref_rows]
+            if sum(n * (n - 1) / 2 for n in ns) < refine_min_quad:
+                ref_rows, salt_rows = [], list(hot_rows)
             if ref_rows:
                 # cost-based routing per hot key: word-join only where
                 # its measured emission (Σ _wdf over the prefix rows)
@@ -808,38 +695,160 @@ def candidate_pairs(
                 # membership table for exact first-rule attribution of
                 # pairs the refined generator legitimately skips (no
                 # shared prefix word) that survive via ANOTHER rule
-                refine_membership = group.select(C.ID, "rule_idx", "key")
+                membership = group.select(C.ID, "rule_idx", "key")
         keys = keys_cold
 
-    if max_block_size is not None:
-        # Cold-side self-join with ONE shuffle of the key table instead
-        # of two, and singletons dropped before the join probe. The
-        # explicit repartition on the join key lets both join sides
-        # read the SAME exchange (ReusedExchange). That needs both sides
-        # to read the same columns below it (_self_join re-derives rto
-        # for that) and the key rows to be a checkpoint, not a persisted
-        # frame (see the docstring); over a persist() the plan ran two
-        # shuffles. The window count's sort is by exactly the join
-        # keys, so it doubles as the sort-merge sort and drops
-        # singleton (rule, key) groups — the vast majority at web
-        # scale, which the plain join shuffled into BOTH sides and
-        # sorted just to produce nothing. Window partitions are bounded
-        # by the hot threshold (hot keys were routed out above), so the
-        # window buffers at most salt_threshold rows per group. Pair
-        # multiset is unchanged (singletons produce no pairs; pinned by
-        # the salting/refine differentials and the block oracles).
-        keyed = keys.repartition("rule_idx", "key")
-        nkey = Window.partitionBy("rule_idx", "key")
-        keys = (
-            keyed.withColumn("_n", F.count("*").over(nkey))
-            .filter(F.col("_n") >= 2)
-            .drop("_n")
-        )
+    # Cold-side self-join with ONE shuffle of the key table instead of
+    # two, and singletons dropped before the join probe. The explicit
+    # repartition on the join key lets both join sides read the SAME
+    # exchange (ReusedExchange). That needs both sides to read the same
+    # columns below it (_self_join re-derives rto for that) and the key
+    # rows to be a checkpoint, not a persisted frame (see
+    # candidate_pairs); over a persist() the plan ran two shuffles. The
+    # window count's sort is by exactly the join keys, so it doubles as
+    # the sort-merge sort and drops singleton (rule, key) groups — the
+    # vast majority at web scale, which the plain join shuffled into
+    # BOTH sides and sorted just to produce nothing. Window partitions
+    # are bounded by the hot threshold (hot keys were routed out above),
+    # so the window buffers at most that many rows per group. Pair
+    # multiset is unchanged (singletons produce no pairs; pinned by the
+    # salting/refine differentials and the block oracles).
+    nkey = Window.partitionBy("rule_idx", "key")
+    keys = (
+        keys.repartition("rule_idx", "key")
+        .withColumn("_n", F.count("*").over(nkey))
+        .filter(F.col("_n") >= 2)
+        .drop("_n")
+    )
     raw_pairs = _self_join(keys)
     if hot_pairs is not None:
         raw_pairs = raw_pairs.unionByName(hot_pairs)
+    return raw_pairs, membership
 
-    grouped = _prune_aggregate(raw_pairs, refine_membership)
+
+def candidate_pairs(
+    records_df: DataFrame,
+    max_block_size: int | None = 1000,
+    hot_key_strategy: str = "salt",
+    surrogate_ids: bool = False,
+    cache_out: list | None = None,
+    refine_min_quad: float | None = None,
+) -> DataFrame:
+    """Pruned candidate pairs (ID_1 < ID_2, rule_idx), first-rule
+    attribution.
+
+    The key rows (:func:`_key_rows`) carry each record's hashed
+    (title, tokens, search_set) payload, the search-set and
+    title-overlap prunes evaluate on the self-join output map-side, and
+    the returned table is already pruned — candidates never pay
+    post-aggregation record joins just to be discarded (at 155k records
+    that is 71M raw pairs pruned to ~1.5M).
+
+    Hot-key skew: a blocking key shared by k records implies O(k²) pairs.
+    With ``hot_key_strategy="salt"`` (default), keys whose group exceeds
+    the salt bucket size (min(max_block_size, SALT_BUCKET_SIZE)) are
+    split into ⌈k / bucket⌉ deterministic salt buckets; within-bucket
+    plus lower-triangular cross-bucket joins regenerate EXACTLY the same
+    pair set while bounding every join group — the quadratic output is
+    spread over many tasks instead of one reducer. ``"drop"`` removes
+    keys above ``max_block_size`` outright (bounded-output mode;
+    observable via :func:`blocking_key_stats`).
+
+    In salt mode, hot groups of require-title-overlap rules may skip the
+    quadratic salted self-join and generate pairs through
+    :func:`_refined_hot_pairs` — wildcard×all plus a prefix-filtered word
+    join whose output is a superset of the downstream prune's survivors,
+    so the FINAL pair set (and, via the post-prune recovery join,
+    first-rule attribution) is bit-identical while the raw pair volume
+    stops growing quadratically at low-entropy keys. Non-overlap rules'
+    hot groups always use the salted join (their pairs are all
+    legitimate output). ``refine_min_quad`` overrides
+    ``REFINE_MIN_QUAD_PAIRS``, the AGGREGATE all-pairs-volume floor below
+    which the whole hot rto set is salted without building the
+    refinement subplan at all: 0 always considers refinement (the refine
+    differentials and the block_refined_pairs oracle), ``math.inf``
+    never does.
+
+    The exploded key table feeds several consumers, so it is stored
+    with ``localCheckpoint()`` and the upstream prep UDF pass runs once.
+    A checkpoint rather than ``persist()``: AQE wraps every read of a
+    persisted frame in its own cache query stage, whose canonical form
+    keeps its stage id, so two exchanges over one cache never match —
+    over a checkpoint the cold self-join's two sides share one shuffle.
+    The trade-off: checkpoint blocks cannot be recomputed, so a lost
+    executor fails the job (as ``cluster()``'s per-round checkpoints
+    already accept). Nothing is registered in the CacheManager.
+
+    Before pair generation ONE aggregate (:func:`_precheck_rows`)
+    answers both path-choosing questions: which keys are hot, and
+    whether a surrogate id collides. A collision (or a repeated input
+    id) warns and rebuilds the key rows with string ids. Pairs then come
+    from the router :func:`_route_pairs`.
+
+    ``cache_out`` — when given, the refined path's shared prefix-word
+    table (whose two shuffles the routing cost estimate already forces)
+    is persisted and appended to the list; the CALLER unpersists after
+    consuming the returned pairs (match.py cache_out convention). When
+    ``None`` (default) nothing is persisted here — the prefix chain is
+    recomputed by the downstream action, trading one extra pass over the
+    hot-key words for a leak-free default.
+    """
+    base = records_df.filter(F.col(C.TITLE).isNotNull())
+
+    # 8-byte surrogate ids through the (dominant) pair shuffles: at web
+    # scale the record ID is a URL, and the raw pair stream would
+    # otherwise carry two of them per row. xxhash64 is deterministic; a
+    # collision would silently fuse two records, so its absence is
+    # CHECKED by the pre-check aggregate below and the string path is
+    # used on the (astronomically rare) hit. Repeated input ids also
+    # route to the string path — purely a physical choice, both paths
+    # emit identical pairs, and duplicate ids are degenerate input.
+    id_map = (
+        base.select(C.ID, F.xxhash64(C.ID).alias("_nid"))
+        if surrogate_ids
+        else None
+    )
+    keys = _key_rows(
+        base, F.xxhash64(C.ID) if surrogate_ids else F.col(C.ID)
+    ).localCheckpoint()
+
+    salt_threshold = None
+    if max_block_size is not None:
+        salt_threshold = (
+            min(max_block_size, SALT_BUCKET_SIZE)
+            if hot_key_strategy == "salt"
+            else max_block_size
+        )
+    hot_rows = []
+    if surrogate_ids or salt_threshold is not None:
+        rows = _precheck_rows(keys, base, salt_threshold, surrogate_ids)
+        hot_rows = [r for r in rows if r["rule_idx"] >= 0]
+        if len(hot_rows) < len(rows):
+            import warnings
+
+            # rare path: the exact counts only for the message
+            n_id, n_nid = base.agg(
+                F.count("*"), F.countDistinct(F.xxhash64(C.ID))
+            ).first()
+            warnings.warn(
+                "xxhash64 surrogate-id collision (or repeated input ids) "
+                f"detected ({n_id} rows -> {n_nid} hashes); falling back "
+                "to string ids for this blocking pass",
+                UserWarning,
+                stacklevel=2,
+            )
+            id_map = None
+            keys = _key_rows(base, F.col(C.ID)).localCheckpoint()
+            full = len(rows) > HOT_KEY_COLLECT_LIMIT
+            if full and salt_threshold is not None:
+                # id rows shared the bound: the hot set may be partial
+                hot_rows = _precheck_rows(keys, base, salt_threshold, False)
+
+    raw_pairs, membership = _route_pairs(
+        keys, hot_rows, max_block_size, hot_key_strategy, refine_min_quad,
+        cache_out,
+    )
+    grouped = _prune_aggregate(raw_pairs, membership)
     if id_map is not None:
         # map surviving pairs back to string ids (two joins over the
         # POST-prune survivors — tiny next to the raw stream) and restore
@@ -877,26 +886,23 @@ def _recover_attribution(
     ALL qualifying rules, block.py:272-277). Recompute qualification
     from the ``membership`` table — DataFrame[ID, rule_idx, key] of the
     refined hot groups — over survivors only, so both joins are
-    post-prune-sized.
+    post-prune-sized. ``grouped`` is read once: a second read would run
+    its whole pair-generation plan twice.
     """
     m = membership.select(C.ID, F.col("rule_idx").alias("_hr"), "key")
-    qual = (
-        grouped.select("ID_1", "ID_2")
-        .join(m.withColumnRenamed(C.ID, "ID_1"), "ID_1")
-        .join(m.withColumnRenamed(C.ID, "ID_2"), ["ID_2", "_hr", "key"])
-        .groupBy("ID_1", "ID_2")
-        .agg(F.min("_hr").alias("_hr"))
+    both = m.select(
+        F.col(C.ID).alias("ID_2"), "_hr", "key", F.lit(True).alias("_both")
     )
+    hr = F.min(F.when(F.col("_both"), F.col("_hr")))
     return (
-        grouped.join(qual, ["ID_1", "ID_2"], "left")
-        .withColumn(
-            "rule_idx",
+        grouped.join(m.withColumnRenamed(C.ID, "ID_1"), "ID_1", "left")
+        .join(both, ["ID_2", "_hr", "key"], "left")
+        .groupBy("ID_1", "ID_2")
+        .agg(
             F.least(
-                F.col("rule_idx"),
-                F.coalesce(F.col("_hr"), F.lit(len(BLOCKING_RULES))),
-            ),
+                F.min("rule_idx"), F.coalesce(hr, F.lit(len(BLOCKING_RULES)))
+            ).alias("rule_idx")
         )
-        .drop("_hr")
     )
 
 
@@ -938,41 +944,35 @@ def _enrich(pruned_pairs: DataFrame, records_df: DataFrame) -> DataFrame:
 def block(
     records_df: DataFrame,
     max_block_size: int | None = 1000,
-    cache: bool = True,
     hot_key_strategy: str = "salt",
     surrogate_ids: bool = True,
-    refine_hot_keys: bool = True,
     cache_out: list | None = None,
-    refine_min_quad: int | None = None,
+    refine_min_quad: float | None = None,
 ) -> DataFrame:
     """Full blocking stage → enriched, pruned pair table.
 
-    ``cache`` stores the (filtered) prepared records with
+    The (filtered) prepared records are stored with
     ``localCheckpoint()``: they feed the key explode plus both enrichment
-    joins — without it, an unpersisted prep stage would re-run its
+    joins — otherwise an unpersisted prep stage would re-run its
     normalizer UDF pass for every consumer. As for the key rows in
     :func:`candidate_pairs`, a checkpoint lets AQE reuse one broadcast
     of the records (and of the surrogate id map) for both enrichment
     joins, and leaves no CacheManager entry behind; a lost executor
     fails the job, because checkpoint blocks cannot be recomputed.
-    ``hot_key_strategy`` / ``surrogate_ids`` — see
-    :func:`candidate_pairs`. Surrogate ids default ON here: the raw pair
-    shuffle carries two 8-byte longs instead of two record-id strings
-    (urls at web scale) per row — measured 22% at 93k url-id records,
-    identical pair + attribution sets, collision-checked with a loud
-    string-path fallback.
+    The other parameters — see :func:`candidate_pairs`. Surrogate ids
+    default ON here: the raw pair shuffle carries two 8-byte longs
+    instead of two record-id strings (urls at web scale) per row —
+    measured 22% at 93k url-id records, identical pair + attribution
+    sets, collision-checked with a loud string-path fallback.
     """
-    records_df = records_df.filter(F.col(C.TITLE).isNotNull())
-    if cache:
-        records_df = records_df.localCheckpoint()
-
+    records_df = records_df.filter(
+        F.col(C.TITLE).isNotNull()
+    ).localCheckpoint()
     pairs = candidate_pairs(
         records_df,
         max_block_size=max_block_size,
-        cache=cache,
         hot_key_strategy=hot_key_strategy,
         surrogate_ids=surrogate_ids,
-        refine_hot_keys=refine_hot_keys,
         cache_out=cache_out,
         refine_min_quad=refine_min_quad,
     )
@@ -1065,6 +1065,7 @@ def _refined_crossing_pairs(
             F.sum(sampled.cast("int")).alias("_nbs"),
         )
         .filter(F.col("_nb") >= min_nb)
+        .orderBy("rule_idx", "key")  # one job: see _precheck_rows
         .limit(HOT_KEY_COLLECT_LIMIT + 1)
         .collect()
     )
@@ -1192,8 +1193,7 @@ def block_delta(
     fresh_corpus_keys: DataFrame | None = None,
     max_block_size: int | None = None,
     hot_key_strategy: str = "salt",
-    refine_hot_keys: bool = True,
-    crossing_refine_min_pairs: int | None = None,
+    crossing_refine_min_pairs: float | None = None,
     cache_out: list | None = None,
 ) -> DataFrame:
     """Incremental blocking: batch×batch plus batch×corpus pairs ONLY.
@@ -1205,9 +1205,10 @@ def block_delta(
     ``corpus_keys`` index (:func:`corpus_key_table`, the same key-row
     schema and hashed payload the in-corpus path joins). At 10^12 corpus
     rows each micro-batch costs O(|batch| + matching key groups), not
-    O(|corpus|). Crossing raw pairs take the in-corpus orientation
-    (least/greatest ID, payload swapped alongside) and go through the
-    same prune + aggregate step (:func:`_prune_aggregate`).
+    O(|corpus|). The batch's key rows are built once and feed every
+    join; the within-batch pairs share :func:`candidate_pairs`' router
+    (:func:`_route_pairs`), and within and crossing raw pairs go through
+    ONE prune + aggregate step (:func:`_prune_aggregate`).
 
     ``broadcast_batch=True`` (micro-batch default) hints the batch side
     broadcast — zero exchange anywhere. For LARGE batches (backfills)
@@ -1227,11 +1228,13 @@ def block_delta(
     fan-out grow WITH THE CORPUS, so per-batch cost stops being flat:
 
     - ``hot_key_strategy="salt"`` (default when ``max_block_size`` set):
-      the within-batch part delegates to :func:`candidate_pairs`' salted
-      self-join (identical pair set, bounded join groups). For the
-      crossing side, hot require-title-overlap keys above the fan-out
-      floor route through :func:`_refined_crossing_pairs` (the shared
-      AllPairs generator probed in both directions, est-gated by
+      the batch's hot keys (:func:`_precheck_rows`) take the router's
+      salted or refined path (identical pair set, bounded join groups).
+      For the crossing side, hot require-title-overlap keys at or above
+      the fan-out floor ``crossing_refine_min_pairs`` (default
+      CROSS_REFINE_MIN_PAIRS; ``math.inf`` keeps the pure fan-out and
+      asks nothing) route through :func:`_refined_crossing_pairs` (the
+      shared AllPairs generator probed in both directions, est-gated by
       CROSS_REFINE_COST_RATIO, with the exact downstream prune and the
       attribution-recovery join — pair set identical, pinned by
       test_block_delta_crossing_refinement_matches_combined and the
@@ -1239,10 +1242,8 @@ def block_delta(
       entropic-title degenerate key and growing with the corpus, while
       dense-vocabulary keys (word join emission ≥ ~10% of the fan-out)
       stay on the fan-out join, which remains the cheaper exact plan
-      there. ``refine_hot_keys=False`` or a huge
-      ``crossing_refine_min_pairs`` restores the pure fan-out.
-      ``cache_out`` collects the refinement's per-batch persist for
-      the caller to release (streaming convention).
+      there. ``cache_out`` collects the refinements' per-batch persists
+      for the caller to release (streaming convention).
     - ``"drop"``: keys whose COMBINED (corpus + batch [+ fresh])
       membership exceeds ``max_block_size`` are dropped from BOTH sides —
       bounded per-batch output, exactly equal to
@@ -1256,11 +1257,18 @@ def block_delta(
     corpus_frames = [corpus_keys]
     if fresh_corpus_keys is not None:
         corpus_frames.append(fresh_corpus_keys)
+    salt = max_block_size is not None and hot_key_strategy == "salt"
 
-    if max_block_size is not None and hot_key_strategy == "drop":
+    hot_rows = []
+    if salt:
+        hot_rows = _precheck_rows(
+            batch_keys, None, min(max_block_size, SALT_BUCKET_SIZE), False
+        )
+    elif max_block_size is not None and hot_key_strategy == "drop":
         # combined membership counts: one slim aggregation over the key
         # tables (2 int/short-string columns), matching the hot set the
-        # combined block-with-drop would compute
+        # combined block-with-drop would compute; the within-batch
+        # router then sees no hot key
         hot = F.broadcast(
             reduce(
                 DataFrame.unionByName,
@@ -1275,23 +1283,26 @@ def block_delta(
             f.join(hot, ["rule_idx", "key"], "left_anti")
             for f in [batch_keys, *corpus_frames]
         )
+    # outside salt mode no batch key is hot here (drop removed them, or
+    # nothing is capped): the plain self-join
+    within, within_membership = _route_pairs(
+        batch_keys, hot_rows, max_block_size if salt else None,
+        hot_key_strategy, cache_out=cache_out,
+    )
 
     # A DEGENERATE hot rto key fans each batch member out against the
     # whole corpus-side key group: O(|batch∩key| · |corpus∩key|) raw
     # rows per batch, growing with the corpus (measured 19→82 s/batch
     # over 6 batches on the degenerate probe).
+    min_pairs = crossing_refine_min_pairs
+    if min_pairs is None:
+        min_pairs = CROSS_REFINE_MIN_PAIRS
     refined = None
-    if (
-        refine_hot_keys
-        and max_block_size is not None
-        and hot_key_strategy == "salt"
-    ):
+    if salt and min_pairs < math.inf:
         refined = _refined_crossing_pairs(
             batch_keys,
             corpus_frames,
-            CROSS_REFINE_MIN_PAIRS
-            if crossing_refine_min_pairs is None
-            else crossing_refine_min_pairs,
+            min_pairs,
             min(max_block_size, SALT_BUCKET_SIZE),
             cache_out=cache_out,
         )
@@ -1319,22 +1330,9 @@ def block_delta(
     if hot_raw_pairs is not None:
         crossing = crossing.unionByName(hot_raw_pairs)
 
-    if max_block_size is not None and hot_key_strategy == "salt":
-        # within-batch pairs via the salted generator (identical pair
-        # set, bounded join groups); batch×batch and batch×corpus pair
-        # sets are disjoint, so aggregating them separately is exact
-        within_pairs = candidate_pairs(
-            batch_prepared,
-            max_block_size=max_block_size,
-            cache=False,
-            hot_key_strategy="salt",
-        )
-        pairs = within_pairs.unionByName(
-            _prune_aggregate(crossing, cross_membership)
-        )
-    else:
-        pairs = _prune_aggregate(_self_join(batch_keys).unionByName(crossing))
-
+    pairs = _prune_aggregate(
+        within.unionByName(crossing), within_membership, cross_membership
+    )
     all_records = corpus_records.unionByName(
         batch_prepared.select(*corpus_records.columns)
     ).filter(F.col(C.TITLE).isNotNull())

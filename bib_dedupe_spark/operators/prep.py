@@ -160,12 +160,16 @@ def prep(records_df: DataFrame, validate: bool = True) -> DataFrame:
         raise ValueError(f"records are missing required fields: {missing}")
 
     if validate:
-        # one shuffle; a null ID is missing, not repeated
+        # one shuffle; a null ID is missing, not repeated. On an orderBy
+        # the limit is a per-partition top-N read in one job; a bare
+        # limit reads the partitions in growing rounds, one job each,
+        # when no ID repeats (block._precheck_rows bounds the same way)
         repeated = (
             df.filter(F.col(C.ID).isNotNull())
             .groupBy(C.ID)
             .count()
             .filter(F.col("count") > 1)
+            .orderBy(C.ID)
             .limit(1)
             .collect()
         )

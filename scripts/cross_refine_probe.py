@@ -16,6 +16,7 @@ correctly declines) is covered by incremental_probe INCR_HOT=1.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -98,7 +99,8 @@ def main() -> None:
 
         walls = {}
         for _ in range(2):
-            for mode, refine in (("refined", True), ("fanout", False)):
+            # an infinite crossing floor keeps every key on the fan-out
+            for mode, floor in (("refined", None), ("fanout", math.inf)):
                 caches: list = []
                 t0 = time.time()
                 block_delta(
@@ -107,7 +109,7 @@ def main() -> None:
                     corpus,
                     max_block_size=1000,
                     hot_key_strategy="salt",
-                    refine_hot_keys=refine,
+                    crossing_refine_min_pairs=floor,
                     cache_out=caches,
                 ).write.format("noop").mode("overwrite").save()
                 w = round(time.time() - t0, 2)

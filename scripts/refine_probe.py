@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 import random
 import subprocess
@@ -96,8 +97,9 @@ def inner(n_base: int, vocab: str, refine: bool) -> None:
     pairs = block(
         prepared,
         max_block_size=max_block_size,
-        refine_hot_keys=refine,
         cache_out=caches,
+        # an infinite volume floor keeps every hot key on the salted join
+        refine_min_quad=None if refine else math.inf,
     ).persist()
     n_pairs = pairs.count()
     wall = time.time() - t0

@@ -5,7 +5,8 @@ Usage: python scripts/scale_e2e.py [n_base] [hot_key_strategy] [max_block_size] 
     n_base           corpus scale (default 40000)
     hot_key_strategy salt | drop   (default salt)
     max_block_size   semantic block-size cap (default 2000)
-    refine           1 | 0 — refine_hot_keys (default 1)
+    refine           1 | 0 — 0 keeps every hot key salted
+                     (refine_min_quad=inf; default 1)
     vocab            dense | zipf — generator title vocabulary (default dense)
 
 Runs prep -> block -> sim+match -> cluster -> merge on a seeded corpus
@@ -17,6 +18,7 @@ entry); this probe shows the WALL-TIME shape at ~10x the bench corpus.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -70,8 +72,8 @@ def main() -> None:
         prepared,
         max_block_size=max_block_size,
         hot_key_strategy=strategy,
-        refine_hot_keys=refine,
         cache_out=block_caches,
+        refine_min_quad=None if refine else math.inf,
     ).persist()
     n_pairs = pairs.count()
     walls["block_s"] = round(time.time() - t0, 1)

@@ -12,10 +12,12 @@ corpus. Every physical path of the delta blocker is compared on
   * salt with the crossing floor at 0, so every batch rto key is a
     crossing-refinement candidate (a spy asserts the word-join
     generator really ran);
-  * salt with ``refine_hot_keys=False`` (pure fan-out);
+  * salt with the crossing floor at ``math.inf``, so no key is a
+    candidate and every crossing pair takes the pure fan-out;
   * ``"drop"`` against ``block(..., "drop")`` at the same cap;
   * ``max_block_size=None`` (no hot-key handling at all).
 """
+import math
 import random
 
 import pandas as pd
@@ -116,7 +118,7 @@ def test_block_delta_equals_block_restriction_fuzz(
     fanout = block_delta(
         batch, corpus_keys, corpus,
         max_block_size=MAX_BLOCK, hot_key_strategy="salt",
-        refine_hot_keys=False,
+        crossing_refine_min_pairs=math.inf,
     )
     _assert_same("salt fan-out", _pairs(fanout), truth, truth_sig)
     dropped = block_delta(

@@ -11,9 +11,10 @@ conflicts — and asserts the three physical paths produce IDENTICAL
 (ID_1, ID_2, rule_idx) sets:
 
   * unsalted    (max_block_size=None — ground truth)
-  * salted      (refine_hot_keys=False)
-  * refined     (refine_hot_keys=True, refine_min_quad=0 so the router
-                 considers every hot key regardless of the volume floor)
+  * salted      (refine_min_quad=math.inf: the volume floor is never
+                 reached, so every hot key takes the salted join)
+  * refined     (refine_min_quad=0 so the router considers every hot
+                 key regardless of the volume floor)
 
 All 200 corpora run in ONE DataFrame per mode, so one Spark action
 covers all seeds. Title words keep their per-corpus tag through prep,
@@ -25,6 +26,7 @@ author+year and author+container keys are therefore shared by all
 corpora and form groups hundreds of records wide, a wanted hot-key
 case. The comparison is over the union, so it is exact either way.
 """
+import math
 import random
 
 import pandas as pd
@@ -104,7 +106,7 @@ def test_refined_salted_unsalted_differential_fuzz(spark, master_seed):
             prepared,
             max_block_size=8,
             hot_key_strategy="salt",
-            refine_hot_keys=False,
+            refine_min_quad=math.inf,
         )
     )
     refined = _pairs(
@@ -112,7 +114,6 @@ def test_refined_salted_unsalted_differential_fuzz(spark, master_seed):
             prepared,
             max_block_size=8,
             hot_key_strategy="salt",
-            refine_hot_keys=True,
             refine_min_quad=0,
         )
     )

@@ -8,6 +8,8 @@ set, and first-rule attribution (via the post-prune recovery join), must
 be bit-identical to both the unrefined salted path and the unsalted
 path. Mirrors reference semantics block.py:96-98,152-198,272-277.
 """
+import math
+
 import pandas as pd
 import pytest
 
@@ -81,7 +83,6 @@ def test_refined_equals_unrefined_and_unsalted(refine_prepared, truth):
             refine_prepared,
             max_block_size=10,
             hot_key_strategy="salt",
-            refine_hot_keys=True,
             refine_min_quad=0,
         )
     )
@@ -90,7 +91,7 @@ def test_refined_equals_unrefined_and_unsalted(refine_prepared, truth):
             refine_prepared,
             max_block_size=10,
             hot_key_strategy="salt",
-            refine_hot_keys=False,
+            refine_min_quad=math.inf,
         )
     )
     assert unrefined == truth
@@ -206,13 +207,8 @@ def test_disjoint_title_pairs_still_pruned(refine_prepared):
 def test_refined_block_end_to_end(refine_prepared, spark):
     from bib_dedupe_spark.operators.block import block
 
-    on = block(
-        refine_prepared,
-        max_block_size=10,
-        refine_hot_keys=True,
-        refine_min_quad=0,
-    )
-    off = block(refine_prepared, max_block_size=10, refine_hot_keys=False)
+    on = block(refine_prepared, max_block_size=10, refine_min_quad=0)
+    off = block(refine_prepared, max_block_size=10, refine_min_quad=math.inf)
     key = ["ID_1", "ID_2", "block_rule"]
     assert sorted(map(tuple, on.select(*key).collect())) == sorted(
         map(tuple, off.select(*key).collect())

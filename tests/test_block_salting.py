@@ -1,6 +1,8 @@
 """Hot-key handling in the blocking stage: the salted bucket join must
 reproduce EXACTLY the unsalted pair set (full coverage, bounded groups);
 the drop strategy must remove only hot-key pairs."""
+import math
+
 import pandas as pd
 import pytest
 
@@ -273,23 +275,70 @@ def test_surrogate_ids_equal_string_path(spark):
         assert a < b
 
 
-def test_candidate_pairs_leaves_no_cache_behind(spark, skewed_prepared):
-    """The hot-key table is driver-materialized, not persist()ed: streaming
-    calls block()/block_delta() per micro-batch, and a lingering cached
-    frame per call accumulates forever. After a salted run with
-    cache=False, no RDD created by the call may remain in the block
-    manager. (RDD ids, not a count: earlier tests' checkpoint RDDs may be
-    cleaned up meanwhile.)"""
-    skewed_prepared.count()  # settle the fixture's own persist
+def test_block_delta_leaves_no_cache_behind(spark, monkeypatch):
+    """The hot-key tables are driver-materialized, not persist()ed, and
+    the refinements' persists go to ``cache_out``: streaming calls
+    block_delta() per micro-batch, and a lingering cached frame per call
+    accumulates forever. After a salt-mode call with both refinements
+    engaged (crossing floor 0, in-batch volume floor 0) and ``cache_out``
+    released, no RDD created by the call may remain in the block
+    manager. (RDD ids, not a count: earlier tests' checkpoint RDDs may
+    be cleaned up meanwhile.)"""
+    from bib_dedupe_spark.operators import block as block_mod
+    from bib_dedupe_spark.operators.block import block_delta, corpus_key_table
+
+    monkeypatch.setattr(block_mod, "REFINE_MIN_QUAD_PAIRS", 0)
+    prepared = _cross_refine_corpus(spark).persist()
+    prepared.count()  # settle the fixture's own persist
+    corpus = prepared.filter("CAST(substring(ID, 2, 6) AS INT) % 2 = 0")
+    batch = prepared.filter("CAST(substring(ID, 2, 6) AS INT) % 2 = 1")
     sc = spark.sparkContext
     first_id = sc.parallelize([0]).id()  # ids are assigned in order
-    candidate_pairs(
-        skewed_prepared, max_block_size=10, cache=False
+    caches: list = []
+    assert block_delta(
+        batch, corpus_key_table(corpus), corpus,
+        max_block_size=5, hot_key_strategy="salt",
+        crossing_refine_min_pairs=0, cache_out=caches,
     ).count()
+    assert len(caches) == 2, "a refinement was not engaged"
+    for df in caches:
+        df.unpersist()
+    prepared.unpersist()
     left = [
         i.id() for i in sc._jsc.sc().getRDDStorageInfo() if i.id() > first_id
     ]
     assert left == []
+
+
+def test_block_delta_builds_batch_key_rows_once(spark, monkeypatch):
+    """A salt-mode block_delta call explodes the batch's key rows once
+    and prunes its within-batch and crossing pairs in one aggregate."""
+    from bib_dedupe_spark.operators import block as block_mod
+    from bib_dedupe_spark.operators.block import block_delta, corpus_key_table
+
+    prepared = _hot_corpus(spark).persist()
+    corpus = prepared.filter("ID < 'H020' OR ID >= 'Z'")
+    batch = prepared.filter("ID >= 'H020' AND ID < 'Z'")
+    corpus_keys = corpus_key_table(corpus)
+    calls = []
+
+    def counting(name):
+        orig = getattr(block_mod, name)
+
+        def spy(*a, **k):
+            calls.append(name)
+            return orig(*a, **k)
+
+        return spy
+
+    for name in ("_key_rows", "_prune_aggregate"):
+        monkeypatch.setattr(block_mod, name, counting(name))
+    pairs = block_delta(
+        batch, corpus_keys, corpus, max_block_size=5, hot_key_strategy="salt"
+    )
+    assert sorted(calls) == ["_key_rows", "_prune_aggregate"]
+    assert pairs.count()
+    prepared.unpersist()
 
 
 def _block_rows(df):
@@ -354,20 +403,22 @@ def test_repeated_ids_sharing_the_collect_bound(
     assert surr == plain
 
 
-def test_salt_bucket_size_decoupled(skewed_prepared):
+def test_salt_bucket_size_decoupled(skewed_prepared, monkeypatch):
     """The salt BUCKET size (execution granularity) is decoupled from
     max_block_size (semantics): any bucket size must reproduce exactly
     the unsalted pair set, and groups between the bucket size and
     max_block_size route through the salted join too."""
+    from bib_dedupe_spark.operators import block as block_mod
+
     unlimited = _pair_set(candidate_pairs(skewed_prepared, max_block_size=None))
     assert _hot_key_pairs(unlimited)
     for bucket in (3, 7, 100):
+        monkeypatch.setattr(block_mod, "SALT_BUCKET_SIZE", bucket)
         salted = _pair_set(
             candidate_pairs(
                 skewed_prepared,
                 max_block_size=100,  # far above every group: nothing hot
                 hot_key_strategy="salt",
-                salt_bucket_size=bucket,
             )
         )
         assert salted == unlimited, bucket
@@ -479,19 +530,20 @@ def test_block_delta_crossing_refinement_matches_combined(spark):
                 crossing_refine_min_pairs=0,
             )
         )
+        # an infinite floor asks no crossing question at all
+        plain = pairset(
+            block_delta(
+                batch, corpus_keys, corpus,
+                max_block_size=5, hot_key_strategy="salt",
+                crossing_refine_min_pairs=math.inf,
+            )
+        )
     finally:
         block_mod._refined_crossing_pairs = orig
     assert outcome == [True], (
         "crossing refinement was not engaged (router sent every key "
         "back to the fan-out join) — the differential no longer pins "
         "the word-join generator"
-    )
-    plain = pairset(
-        block_delta(
-            batch, corpus_keys, corpus,
-            max_block_size=5, hot_key_strategy="salt",
-            refine_hot_keys=False,
-        )
     )
     combined = block_fn(corpus.unionByName(batch), max_block_size=None)
     want = {
@@ -591,14 +643,14 @@ def test_crossing_estimate_blind_batch_side_routes_to_fanout(
         )
     )
     assert considered, "the hot crossing key was never a refine candidate"
-    assert outcome == [False], "dense key was routed to the word join"
     fanout = pairset(
         block_delta(
             batch, corpus_keys, corpus,
             max_block_size=5, hot_key_strategy="salt",
-            refine_hot_keys=False,
+            crossing_refine_min_pairs=math.inf,
         )
     )
+    assert outcome == [False], "dense key was routed to the word join"
     combined = block_fn(prepared, max_block_size=None)
     want = {
         (r["ID_1"], r["ID_2"], r["block_rule"])

@@ -56,3 +56,43 @@ def test_dedupe_leaves_no_cache_behind(spark, records):
     for _ in range(2):
         assert dedupe(records).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _jobs(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_bounded_collects_read_each_partition_once(spark, records):
+    """prep's ID check and block's pre-check collect are bounded
+    collects over an aggregate. With many post-shuffle partitions and no
+    qualifying row, each runs the aggregate's map stage and ONE result
+    job: no growing rounds of partition scans, one job each."""
+    from bib_dedupe_spark.operators.block import _key_rows, _precheck_rows
+    from pyspark.sql import functions as F
+
+    keys = _key_rows(prep(records, validate=False), F.col("ID"))
+    conf = {
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        id_check = _jobs(spark, "prep-id-check", lambda: prep(records))
+        precheck = _jobs(
+            spark,
+            "block-precheck",
+            lambda: _precheck_rows(keys, None, 10**9, False),
+        )
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert (id_check, precheck) == (2, 2)
